@@ -1159,11 +1159,11 @@ object SparkEntry {
 
     // streaming tumbling drain vs batch mirror restricted to the windows
     // the final watermark (max ts - 10 min) finalized. Boundary semantics
-    // verified empirically (graft.tools.ProbeR5): a window whose END equals
-    // the final watermark IS emitted by the AvailableNow drain — Spark's
-    // append-mode eviction is `window.end <= watermark` — so the mirror's
-    // `<=` below matches exactly (round-4 advice suggested strict `<`; the
-    // probe shows non-strict is correct, incl. the exact-boundary case)
+    // verified empirically: a window whose END equals the final watermark
+    // IS emitted by the AvailableNow drain — Spark's append-mode eviction
+    // is `window.end <= watermark` — so the mirror's `<=` below matches
+    // exactly (strict `<` was considered; a drain over an exact-boundary
+    // window shows non-strict is correct)
     "events_stream_tumbling" ->
       """WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events),
         |agg AS (

@@ -245,25 +245,14 @@ object Dedup {
     *
     * One native codegen expression ([[graft.functions.MinhashSignatureExpression]])
     * computing all family minima in a single pass. The expression-tree form
-    * it replaced ([[minhashSignatureReference]]) evaluated `numHashes`
-    * separate `array_min(transform(...))` subtrees — `numHashes` array
-    * allocations per row and the k-independent inner `hashLong(h, 42)`
-    * re-derived once per family (measured: the signature pass dominated the
-    * minhash bench query at ~1.3 s of 2.1 s). Output is bit-identical
+    * it replaced evaluated `numHashes` separate `array_min(transform(...))`
+    * subtrees — `numHashes` array allocations per row and the
+    * k-independent inner `hashLong(h, 42)` re-derived once per family
+    * (measured: the signature pass dominated the minhash bench query at
+    * ~1.3 s of 2.1 s). Output is bit-identical
     * (MinhashSignatureSpec pins it against the reference tree). */
   def minhashSignatureFromHashes(hs: Column, numHashes: Int): Column =
     graft.functions.MinhashSignatureExpression.minhashSignature(hs, numHashes)
-
-  /** The original expression-tree formulation, kept as the equivalence
-    * REFERENCE for the native expression (see MinhashSignatureSpec — the
-    * two must agree bit-for-bit on every input, including null elements
-    * and empty arrays). `hs` must be a materialized attribute: the
-    * `numHashes` syntactic references block CollapseProject from inlining
-    * the upstream shingle+hash projection into the lambdas (the measured
-    * 8× trap documented in round 3). */
-  private[graft] def minhashSignatureReference(hs: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(k =>
-      array_min(transform(hs, h => xxhash64(h, lit(k))))): _*)
 
   /** Convenience one-shot form — inlines the shingle hashing `numHashes`
     * times, so use only on small frames/tests; production paths

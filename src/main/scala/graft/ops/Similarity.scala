@@ -21,11 +21,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.DotProductExpression.dotProduct(a, b)
 
-  /** The original expression-tree formulation — the equivalence REFERENCE
-    * for the native expression (DotProductSpec compares raw bits). */
-  private[graft] def dotReference(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))

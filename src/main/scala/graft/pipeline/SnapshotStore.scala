@@ -76,13 +76,16 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     * never a second pass over the data. */
   def write(stage: String, df: DataFrame, partitionCols: Seq[String] = Nil,
             metrics: Seq[(String, Column)] = Nil,
-            sortCols: Seq[String] = Nil): Int = {
-    // wall time from job start to manifest assembly rides the manifest
-    // ("sec"): the compute block upstream is lazy, so this write job IS the
-    // stage's execution — persisted per-stage timings are the end-to-end
-    // DAG regression signal a resumed/audited run can read back without
-    // re-running anything
-    val t0 = System.nanoTime()
+            sortCols: Seq[String] = Nil): Int =
+    commit(stage, df, partitionCols, metrics, sortCols, System.nanoTime())
+
+  /** [[write]] with the stage clock started at `t0`. The manifest's "sec"
+    * is the wall time from `t0` to manifest assembly — the persisted
+    * per-stage timing a resumed or audited run reads back without
+    * re-running anything. */
+  private def commit(stage: String, df: DataFrame, partitionCols: Seq[String],
+                     metrics: Seq[(String, Column)], sortCols: Seq[String],
+                     t0: Long): Int = {
     val v = latestVersion(stage).map(_ + 1).getOrElse(0)
     val dir = versionDir(stage, v)
 
@@ -147,16 +150,18 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
   /** Run-or-resume: if a committed snapshot exists, read it; otherwise
     * compute, commit, and read back (so downstream always consumes the
     * materialized — deterministic — bytes). Metric aggregates ride the
-    * write job via observe() — a metric'd stage costs exactly one pass. */
+    * write job via observe() — a metric'd stage costs exactly one pass.
+    *
+    * The manifest's "sec" times the whole stage: the compute block (its
+    * eager work — local checkpoints, linker pre-passes, a nested stage)
+    * plus the write. */
   def stage(name: String, partitionCols: Seq[String] = Nil,
             metrics: Seq[(String, Column)] = Nil,
             sortCols: Seq[String] = Nil)
            (compute: => DataFrame): DataFrame = {
     if (!exists(name)) {
-      val t0 = System.nanoTime()
-      val df = compute
-      write(name, df, partitionCols, metrics, sortCols)
-      println(f"[stage-time] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val t0 = System.nanoTime() // before `compute` runs: it is a strict argument
+      commit(name, compute, partitionCols, metrics, sortCols, t0)
     }
     read(name)
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -15,10 +16,14 @@ class DotProductSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  /** The original expression-tree formulation of `Similarity.dot`. */
+  private def dotReference(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
+
   private def compare(rows: Seq[(Array[Double], Array[Double])]): Unit = {
     val df = rows.toDF("a", "b")
       .withColumn("fast", Similarity.dot($"a", $"b"))
-      .withColumn("ref", Similarity.dotReference($"a", $"b"))
+      .withColumn("ref", dotReference($"a", $"b"))
       .collect()
     df.zipWithIndex.foreach { case (r, i) =>
       val fi = r.fieldIndex("fast")
@@ -66,7 +71,7 @@ class DotProductSpec extends AnyFunSuite {
       (None: Option[Array[Double]], Some(Array(1.0))),
     ).toDF("a", "b")
       .withColumn("fast", Similarity.dot($"a", $"b"))
-      .withColumn("ref", Similarity.dotReference($"a", $"b"))
+      .withColumn("ref", dotReference($"a", $"b"))
       .collect()
     df.foreach { r =>
       assert(r.isNullAt(r.fieldIndex("fast")) && r.isNullAt(r.fieldIndex("ref")))

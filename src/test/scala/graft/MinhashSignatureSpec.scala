@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -16,6 +17,14 @@ class MinhashSignatureSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  /** The original expression-tree formulation of
+    * `Dedup.minhashSignatureFromHashes`. `hs` must be a materialized
+    * attribute: the `numHashes` syntactic references block CollapseProject
+    * from inlining the upstream shingle+hash projection into the lambdas. */
+  private def minhashSignatureReference(hs: Column, numHashes: Int): Column =
+    array((0 until numHashes).map(k =>
+      array_min(transform(hs, h => xxhash64(h, lit(k))))): _*)
+
   test("native signature ≡ reference tree on real shingle hashes") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -30,7 +39,7 @@ class MinhashSignatureSpec extends AnyFunSuite {
         transform(Dedup.shinglesFromTokens(col("__toks")), s => xxhash64(s)).as("hs"))
     val both = hs.select(col("doc_id"),
         Dedup.minhashSignatureFromHashes(col("hs"), 64).as("fused"),
-        Dedup.minhashSignatureReference(col("hs"), 64).as("ref"))
+        minhashSignatureReference(col("hs"), 64).as("ref"))
       .collect()
     both.foreach { r =>
       assert(r.getSeq[Any](1) == r.getSeq[Any](2),
@@ -47,7 +56,7 @@ class MinhashSignatureSpec extends AnyFunSuite {
     ).toDF("id", "hs")
     val both = df.select(col("id"),
         Dedup.minhashSignatureFromHashes(col("hs"), 16).as("fused"),
-        Dedup.minhashSignatureReference(col("hs"), 16).as("ref"))
+        minhashSignatureReference(col("hs"), 16).as("ref"))
       .collect()
     both.foreach { r =>
       assert(r.getSeq[Any](1) == r.getSeq[Any](2),

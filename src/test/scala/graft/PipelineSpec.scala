@@ -95,6 +95,24 @@ class PipelineSpec extends AnyFunSuite {
       s"observe metric missing: $manifest")
   }
 
+  test("snapshot store: manifest sec times the compute block plus the write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sec").toString
+    val store = new SnapshotStore(spark, dir)
+    // a first write in a fresh JVM can itself take over a second; warm the
+    // write path so the write alone stays well under the asserted bound
+    store.stage("warm")(Seq((0, "w")).toDF("id", "v"))
+    // eager work inside the compute block (like a stage's local
+    // checkpoints) is part of the stage and must land in its manifest time
+    store.stage("slow") {
+      Thread.sleep(1000)
+      Seq((1, "a")).toDF("id", "v")
+    }
+    val manifest = store.readManifest("slow")
+    val sec = "\"sec\": ([0-9.]+)".r.findFirstMatchIn(manifest)
+      .getOrElse(fail(s"no sec in manifest: $manifest")).group(1).toDouble
+    assert(sec >= 1.0, s"manifest sec $sec misses the compute block")
+  }
+
   test("full pipeline over synthetic docs: stages commit, output sane, resume identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
     val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")
