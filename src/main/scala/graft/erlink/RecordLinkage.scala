@@ -24,56 +24,60 @@ import graft.model.NS
 object RecordLinkage {
 
   /** Feature extraction: triples → one row per PrisonerRecord with the
-    * linker.py:104-158 fields. Pruned persons are skipped (P5). */
+    * linker.py:104-158 fields. Pruned persons are skipped (P5).
+    *
+    * One pass per entity (the SparkER profile build): the feature
+    * predicates' triples, with the rank level attached by a broadcast
+    * join, fold into one row per subject through conditional aggregates,
+    * joined back to the PrisonerRecord type rows. A field whose predicate
+    * the person lacks is null, never an empty array. */
   def prisonerFeatures(triples: DataFrame, ranksGaz: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
 
-    val persons = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord"))
-      .select($"subj".as("person_uri"), $"docId")
-    val pruned = triples
-      .filter($"pred" === (NS.SCHEMA_POW + "personal_information_removed"))
-      .select($"subj".as("person_uri")).distinct()
-    val live = persons.join(pruned, Seq("person_uri"), "left_anti")
-
-    def objsOf(pred: String, name: String): DataFrame =
-      triples.filter($"pred" === pred)
-        .groupBy($"subj".as("person_uri"))
-        .agg(sort_array(collect_set($"objValue")).as(name))
-
-    def firstOf(pred: String, name: String): DataFrame =
-      triples.filter($"pred" === pred)
-        .groupBy($"subj".as("person_uri")).agg(min($"objValue").as(name))
-
+    val removed = NS.SCHEMA_POW + "personal_information_removed"
+    val rank = NS.SCHEMA_POW + "rank"
+    val sets = Seq(rank -> "rank",
+      NS.SCHEMA_WARSA + "municipality_of_birth" -> "birth_place",
+      NS.SCHEMA_POW + "municipality_of_death" -> "death_place",
+      NS.SCHEMA_POW + "unit" -> "unit",
+      NS.BIOC + "has_occupation" -> "occupation")
+    val firsts = Seq(NS.SCHEMA_WARSA + "given_names" -> "given",
+      NS.SCHEMA_WARSA + "family_name" -> "family_raw")
     // date fields: only typed xsd:date values carry into min/max folding
     // (get_date_value analogue — strings fold out as nulls)
-    def dates(pred: String, minName: String, maxName: String): DataFrame =
-      triples.filter($"pred" === pred && $"objDatatype" === NS.XSD_DATE)
-        .groupBy($"subj".as("person_uri"))
-        .agg(min($"objValue").as(minName), max($"objValue").as(maxName))
+    val dates = Seq(NS.SCHEMA_WARSA + "date_of_birth" -> "birth",
+      NS.SCHEMA_POW + "date_of_death" -> "death")
 
-    val rankLevels = triples.filter($"pred" === (NS.SCHEMA_POW + "rank"))
-      .select($"subj".as("person_uri"), $"objValue".as("rank_uri"))
-      .join(broadcast(ranksGaz.select($"uri".as("rank_uri"), $"level")), Seq("rank_uri"))
-      .groupBy($"person_uri").agg(max($"level").as("rank_level"))
+    def is(pred: String): Column = $"pred" === pred
+    def date(pred: String): Column = when(is(pred) && $"objDatatype" === NS.XSD_DATE, $"objValue")
+    val aggs =
+      sets.map { case (p, n) =>
+        when(max(is(p)), sort_array(collect_set(when(is(p), $"objValue")))).as(n)
+      } ++ firsts.map { case (p, n) => min(when(is(p), $"objValue")).as(n) } ++
+        dates.flatMap { case (p, n) =>
+          Seq(min(date(p)).as(n + "_begin"), max(date(p)).as(n + "_end"))
+        } ++ Seq(max($"level").as("rank_level"), max(is(removed)).as("removed"))
 
-    live
-      .join(firstOf(NS.SCHEMA_WARSA + "given_names", "given"), Seq("person_uri"), "left")
-      .join(firstOf(NS.SCHEMA_WARSA + "family_name", "family_raw"), Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_POW + "rank", "rank"), Seq("person_uri"), "left")
-      .join(rankLevels, Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_WARSA + "municipality_of_birth", "birth_place"), Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_POW + "municipality_of_death", "death_place"), Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_POW + "unit", "unit"), Seq("person_uri"), "left")
-      .join(objsOf(NS.BIOC + "has_occupation", "occupation"), Seq("person_uri"), "left")
-      .join(dates(NS.SCHEMA_WARSA + "date_of_birth", "birth_begin", "birth_end"), Seq("person_uri"), "left")
-      .join(dates(NS.SCHEMA_POW + "date_of_death", "death_begin", "death_end"), Seq("person_uri"), "left")
-      // previous-name unification: "Heino (ent. Kalmari)" -> "Heino Kalmari"
-      // (linker.py:143)
-      .withColumn("family", regexp_replace($"family_raw", "\\(ent\\.\\s*(.+)\\)", "$1"))
-      .withColumn("activity_end", $"death_end")
-      .drop("family_raw")
+    val preds = (sets ++ firsts ++ dates).map(_._1) :+ removed
+    val levels = broadcast(ranksGaz.select($"uri", $"level"))
+    val profiles = triples.filter($"pred".isin(preds: _*))
+      .join(levels, is(rank) && $"objValue" === $"uri", "left")
+      .groupBy($"subj".as("person_uri"))
+      .agg(aggs.head, aggs.tail: _*)
+
+    triples
+      .filter(is(NS.RDF_TYPE) && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord"))
+      .select($"subj".as("person_uri"), $"docId")
+      .join(profiles, Seq("person_uri"), "left")
+      .filter(!coalesce($"removed", lit(false)))
+      .select($"person_uri", $"docId", $"given", $"rank", $"rank_level", $"birth_place",
+        $"death_place", $"unit", $"occupation", $"birth_begin", $"birth_end",
+        $"death_begin", $"death_end",
+        // previous-name unification: "Heino (ent. Kalmari)" -> "Heino Kalmari"
+        // (linker.py:143)
+        regexp_replace($"family_raw", "\\(ent\\.\\s*(.+)\\)", "$1").as("family"),
+        $"death_end".as("activity_end"))
   }
 
   /** Blocking keys for one side: composite conjunction blocks
@@ -209,10 +213,10 @@ object RecordLinkage {
     * (crm:P70_documents shape like construct_people.sparql). */
   def linkPersons(triples: DataFrame, ranksGaz: DataFrame, personsGaz: DataFrame,
                   threshold: Double = 0.8): DataFrame = {
-    // the feature plan (a dozen aggregating self-joins over the triples
-    // table) feeds BOTH the blocking branch and the scoring branch — left
-    // lazy it executes twice inside the one linking action; checkpoint it
-    // once (lazy: materializes on first use)
+    // the feature plan (an aggregation over the triples table) feeds BOTH
+    // the blocking branch and the scoring branch — left lazy it executes
+    // twice inside the one linking action; checkpoint it once (lazy:
+    // materializes on first use)
     val feats = prisonerFeatures(triples, ranksGaz).localCheckpoint(false)
     val links = scorePairs(candidatePairs(feats, personsGaz), feats, personsGaz, threshold)
     val spark = triples.sparkSession

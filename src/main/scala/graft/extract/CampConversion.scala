@@ -73,14 +73,16 @@ object CampConversion {
     val campLoc = triples
       .filter($"pred" === (NS.SCHEMA_POW + "captivity_location"))
     // required pattern: camps WITHOUT a captivity_location emit nothing
-    val campSubj = broadcast(subjectsOf("PowCamp")
-      .join(campLoc.select($"subj").distinct(), Seq("subj"), "left_semi"))
-    val hospSubj = broadcast(subjectsOf("PowHospital"))
-    val branchSubj = broadcast(campSubj.unionByName(hospSubj).distinct())
+    // broadcast hints sit on the join sides only: Spark ignores (and
+    // warns about) a hint inside a union or on a left outer join's left side
+    val campSubj = subjectsOf("PowCamp")
+      .join(campLoc.select($"subj").distinct(), Seq("subj"), "left_semi")
+    val hospSubj = subjectsOf("PowHospital")
+    val branchSubj = campSubj.unionByName(hospSubj).distinct()
 
-    val campOwn = triples.join(campSubj, Seq("subj"), "left_semi")
+    val campOwn = triples.join(broadcast(campSubj), Seq("subj"), "left_semi")
       .filter($"pred" =!= (NS.SCHEMA_POW + "huomautuksia-poistetaan-kun-asiat-on-kayty-lapi"))
-    val hospOwn = triples.join(hospSubj, Seq("subj"), "left_semi")
+    val hospOwn = triples.join(broadcast(hospSubj), Seq("subj"), "left_semi")
       .filter($"pred" =!= (NS.SCHEMA_POW + "poistettava-tyosarake"))
 
     def labelRow(df: DataFrame) = df.select($"subj",
@@ -90,7 +92,7 @@ object CampConversion {
 
     // one label per captivity_location VALUE (per-solution BIND)
     val campLabels = labelRow(campLoc.filter(!$"objIsUri")
-      .join(campSubj, Seq("subj"), "left_semi")
+      .join(broadcast(campSubj), Seq("subj"), "left_semi")
       .select($"subj", $"objValue".as("label")).distinct())
 
     // one label per OPTIONAL (type, camp_id) combination
@@ -107,7 +109,7 @@ object CampConversion {
     // REPLACE semantics: no filter — a coord literal that misses the
     // regex passes through unchanged, exactly like the reference
     val coords = triples.filter($"pred" === (NS.SCHEMA_POW + "coordinates"))
-      .join(branchSubj, Seq("subj"), "left_semi")
+      .join(broadcast(branchSubj), Seq("subj"), "left_semi")
       .select($"subj",
         regexp_replace($"objValue", "(\\d\\d\\.\\d+),.*", "$1").as("lat"),
         regexp_replace($"objValue", ".*,\\W*(\\d\\d\\.\\d+)$", "$1").as("long"))

@@ -32,8 +32,9 @@ object Normalize {
 
 /** Entity-linking operators (SURVEY.md §2.4 J1-J13), all re-expressed as
   * broadcast hash joins against the synthetic gazetteers — the reference's
-  * per-literal ARPA HTTP round-trips (src/linker.py:41-73) become one
-  * batched join per task, zero shuffles on the doc side.
+  * per-literal ARPA HTTP round-trips (src/linker.py:41-73) become batched
+  * joins (one for all exact-dictionary tasks), zero shuffles on the doc
+  * side.
   *
   * Every linker takes/returns triples in the engine's native Dataset form;
   * a predicate filter on the triples table hits the predicate partitioning
@@ -50,98 +51,96 @@ object Linkers {
     triples.filter(col("pred") === pred && !col("objIsUri"))
       .select(col("subj"), col("objValue").as("literal"), col("docId"))
 
-  private def linkTriples(df: DataFrame, targetProp: String): DataFrame =
-    df.select(col("subj"), lit(targetProp).as("pred"),
+  private def linkTriples(df: DataFrame, target: Column): DataFrame =
+    df.select(col("subj"), target.as("pred"),
       col("uri").as("objValue"), lit(true).as("objIsUri"),
       lit(null).cast("string").as("objLang"),
       lit(null).cast("string").as("objDatatype"), col("docId"))
 
-  /** J1 generic: broadcast label equi-join after normalization; first-hit
-    * = deterministic min-uri per (subj, literal) (the reference takes the
-    * first ARPA hit, linker.py:57 — any stable pick satisfies it). */
-  def linkByLabel(triples: DataFrame, sourceProp: String, targetProp: String,
-                  gazetteer: DataFrame /* (uri,label) */): DataFrame = {
-    val g = broadcast(gazetteer.select(col("uri"), fold(col("label")).as("k")))
-    val hit = literals(triples, sourceProp)
-      .withColumn("k", fold(col("literal")))
-      .join(g, "k")
-      .groupBy("subj", "literal", "docId").agg(min("uri").as("uri"))
-    linkTriples(hit, targetProp)
+  /** One exact-dictionary linking task: literals of `source` are keyed by
+    * `key` and looked up in `dict` (uri, k); hits become `target` links. */
+  final case class DictTask(source: String, target: String, key: Column => Column,
+                            dict: DataFrame /* (uri, k) */)
+
+  /** J1 batched: every exact-dictionary task in one pass — one scan of the
+    * source literals, one broadcast equi-join on (source predicate, key)
+    * and one first-hit aggregation, the deterministic min-uri per (subj,
+    * literal) (the reference takes the first ARPA hit, linker.py:57 — any
+    * stable pick satisfies it). Sources must be distinct: the source
+    * predicate is what routes a literal to its task's key and target. */
+  def linkDictionary(triples: DataFrame, tasks: Seq[DictTask]): DataFrame = {
+    require(tasks.map(_.source).distinct.size == tasks.size,
+      s"dictionary tasks share a source predicate: ${tasks.map(_.source)}")
+    val src = col("pred")
+    val key = tasks.tail.foldLeft(when(src === tasks.head.source, tasks.head.key(col("literal")))) {
+      (acc, t) => acc.when(src === t.source, t.key(col("literal")))
+    }
+    val dict = tasks.map(t => t.dict.select(lit(t.source).as("pred"), lit(t.target).as("target"),
+      col("k"), col("uri"))).reduce(_ unionByName _)
+    val hit = triples.filter(src.isin(tasks.map(_.source): _*) && !col("objIsUri"))
+      .select(col("subj"), col("pred"), col("objValue").as("literal"), col("docId"))
+      .withColumn("k", key)
+      .join(broadcast(dict), Seq("pred", "k"))
+      .groupBy("subj", "target", "literal", "docId").agg(min("uri").as("uri"))
+    linkTriples(hit, col("target"))
   }
 
-  /** J2: camps — alias remap (linker.py:79-83) then exact join on
+  /** J2: camps — alias remap (linker.py:79-83) then exact match on
     * camp_id | captivity_location. */
-  def linkCamps(triples: DataFrame, campsGaz: DataFrame): DataFrame = {
-    val remap: Column = {
-      val l = col("literal")
+  def campTask(campsGaz: DataFrame): DictTask = {
+    def remap(l: Column): Column =
       when(l === "Siestarjoki", "Siestarjoki, ven. Sestroretsk")
         .when(l === "Karhumäki", "Karhumäki, evakuointipiste")
         .when(l === "Sorokka", "Sorokka ven. Belomorsk")
         .otherwise(l)
-    }
-    val keys = broadcast(
+    DictTask(NS.SCHEMA_POW + "location_literal", NS.SCHEMA_POW + "location", remap,
       campsGaz.select(col("uri"), col("camp_id").as("k"))
         .filter(length(col("k")) > 0)
         .unionByName(campsGaz.select(col("uri"), col("captivity_location").as("k"))))
-    val hit = literals(triples, NS.SCHEMA_POW + "location_literal")
-      .withColumn("k", remap)
-      .join(keys, "k")
-      .groupBy("subj", "literal", "docId").agg(min("uri").as("uri"))
-    linkTriples(hit, NS.SCHEMA_POW + "location")
   }
 
-  /** J3: warsa municipalities — distinct union of the four literal
-    * properties, one match pass, mapped back per property
-    * (linker.py:225-264). */
-  def linkMunicipalities(triples: DataFrame, munGaz: DataFrame): DataFrame = {
-    val pairs = Seq(
+  def linkCamps(triples: DataFrame, campsGaz: DataFrame): DataFrame =
+    linkDictionary(triples, Seq(campTask(campsGaz)))
+
+  /** J3: warsa municipalities — the four literal properties against one
+    * registry, each mapped to its own link property (linker.py:225-264). */
+  def municipalityTasks(munGaz: DataFrame): Seq[DictTask] = {
+    val dict = munGaz.select(col("uri"), fold(col("label")).as("k"))
+    Seq(
       NS.SCHEMA_WARSA + "municipality_of_birth_literal" -> (NS.SCHEMA_WARSA + "municipality_of_birth"),
       NS.SCHEMA_POW + "municipality_of_domicile_literal" -> (NS.SCHEMA_POW + "municipality_of_domicile"),
       NS.SCHEMA_POW + "municipality_of_residence_literal" -> (NS.SCHEMA_POW + "municipality_of_residence"),
       NS.SCHEMA_POW + "municipality_of_capture_literal" -> (NS.SCHEMA_POW + "municipality_of_capture"),
-    )
-    val g = broadcast(munGaz.select(col("uri"), fold(col("label")).as("k")))
-    pairs.map { case (src, dst) =>
-      val hit = literals(triples, src)
-        .withColumn("k", fold(col("literal")))
-        .join(g, "k")
-        .groupBy("subj", "literal", "docId").agg(min("uri").as("uri"))
-      linkTriples(hit, dst)
-    }.reduce(_ unionByName _)
+    ).map { case (src, dst) => DictTask(src, dst, fold, dict) }
   }
+
+  def linkMunicipalities(triples: DataFrame, munGaz: DataFrame): DataFrame =
+    linkDictionary(triples, municipalityTasks(munGaz))
 
   /** J4: PNR municipality-of-death link with place-type restriction
     * (arpa_services/pnr_municipality: types 540/550). */
-  def linkPnrDeathMunicipality(triples: DataFrame, pnr: DataFrame): DataFrame = {
-    val g = broadcast(pnr.filter(col("place_type").isin(540, 550))
-      .select(col("uri"), fold(col("label")).as("k")))
-    val hit = literals(triples, NS.SCHEMA_POW + "municipality_of_death_literal")
-      .withColumn("k", fold(col("literal")))
-      .join(g, "k")
-      .groupBy("subj", "literal", "docId").agg(min("uri").as("uri"))
-    linkTriples(hit, NS.SCHEMA_POW + "municipality_of_death")
-  }
+  def pnrDeathTask(pnr: DataFrame): DictTask =
+    DictTask(NS.SCHEMA_POW + "municipality_of_death_literal", NS.SCHEMA_POW + "municipality_of_death",
+      fold, pnr.filter(col("place_type").isin(540, 550)).select(col("uri"), fold(col("label")).as("k")))
 
-  /** J5: ranks — abbreviation expansion then label join
+  def linkPnrDeathMunicipality(triples: DataFrame, pnr: DataFrame): DataFrame =
+    linkDictionary(triples, Seq(pnrDeathTask(pnr)))
+
+  /** J5: ranks — abbreviation expansion then label match
     * (link_ranks delegation, linker.py:555-558). */
-  def linkRanks(triples: DataFrame, ranksGaz: DataFrame): DataFrame = {
-    val abbrev = Gaz.abbrevExpand(fold(col("literal")))
-    val g = broadcast(ranksGaz.select(col("uri"), fold(col("label")).as("k")))
-    val hit = literals(triples, NS.SCHEMA_POW + "rank_literal")
-      .withColumn("k", abbrev)
-      .join(g, "k")
-      .groupBy("subj", "literal", "docId").agg(min("uri").as("uri"))
-    linkTriples(hit, NS.SCHEMA_POW + "rank")
-  }
-
-  private object Gaz {
-    def abbrevExpand(k: Column): Column = {
-      val stripped = regexp_replace(k, "\\.$", "")
+  def rankTask(ranksGaz: DataFrame): DictTask = {
+    def abbrevExpand(l: Column): Column = {
+      val stripped = regexp_replace(fold(l), "\\.$", "")
       graft.gazetteer.Gazetteers.rankAbbreviations.foldLeft(stripped) {
         case (acc, (short, full)) => when(stripped === short, full).otherwise(acc)
       }
     }
+    DictTask(NS.SCHEMA_POW + "rank_literal", NS.SCHEMA_POW + "rank", abbrevExpand,
+      ranksGaz.select(col("uri"), fold(col("label")).as("k")))
   }
+
+  def linkRanks(triples: DataFrame, ranksGaz: DataFrame): DataFrame =
+    linkDictionary(triples, Seq(rankTask(ranksGaz)))
 
   /** Generic fuzzy dictionary link: first-letter blocking (candidate
     * space |docs| × |bucket| instead of a cross join), a similarity
@@ -168,7 +167,7 @@ object Linkers {
     val w = Window.partitionBy("subj", "literal").orderBy(col("score").desc, col("uri"))
     val hit = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("subj"), col("literal"), col("docId"), col("uri"))
-    linkTriples(hit, targetProp)
+    linkTriples(hit, lit(targetProp))
   }
 
   /** J6: occupations — fuzzy Jaro-Winkler join at threshold 0.84
@@ -250,7 +249,7 @@ object Linkers {
       .orderBy($"period_match".desc, $"gram_len".desc, $"uri")
     val hit = scored.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
       .select($"subj", $"literal", $"docId", $"uri")
-    linkTriples(hit, NS.SCHEMA_POW + "unit")
+    linkTriples(hit, lit(NS.SCHEMA_POW + "unit"))
   }
 
   /** E23: the war-period rule — capture date < 1941-06-24 ⇒ WinterWar,
@@ -283,17 +282,17 @@ object Linkers {
   def linkMagazines(triples: DataFrame, index: DataFrame): (DataFrame, DataFrame) = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val idx = broadcast(index.select(
+    val idx = index.select(
       regexp_replace($"viite", "^\\s+|\\s+$", "").as("k"),
       concat(lit(NS.MEDIA), lit("sotilaan_aani_"), $"hakemisto", lit("_"), $"tiedostonimi").as("uri"),
-      $"hakemisto", $"tiedostonimi"))
+      $"hakemisto", $"tiedostonimi")
 
     val refs = literals(triples, NS.SCHEMA_POW + "sotilaan_aani")
       .unionByName(literals(triples, NS.SCHEMA_POW + "photograph_sotilaan_aani"))
       .withColumn("k", regexp_replace($"literal", "^\\s+|\\s+$", ""))
 
     // a textual reference may hit several issues (multimap) — natural fanout
-    val hits = refs.join(idx, "k")
+    val hits = refs.join(broadcast(idx), "k")
     val links = hits.select($"subj", lit(NS.SCHEMA_WARSA + "sotilaan_aani_magazine").as("pred"),
       $"uri".as("objValue"), lit(true).as("objIsUri"),
       lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),

@@ -99,12 +99,6 @@ object Pipeline {
     val pruned = store.stage("pruned", sortCols = Seq("pred")) {
       Privacy.prunePersons(extracted, Gazetteers.casualtiesNameCounts(spark), today)
     }
-    // the pruning pass persists its person-sized classification frames for
-    // the duration of the stage write; once the snapshot is committed (or
-    // was resumed) nothing reads them again — release the executor storage
-    // instead of pinning it for the remaining stages. Nothing else is
-    // cached at this point in the DAG, so the blanket clear is exact.
-    spark.catalog.clearCache()
 
     // -- 3. linking (process.sh:30-96) ------------------------------------
     // media linkers return (links, media-doc entities): links join the
@@ -114,13 +108,13 @@ object Pipeline {
     val personDocs = Linkers.linkPersonDocuments(Gazetteers.personDocumentPaths(spark))
     val videos = Linkers.linkVideos(Gazetteers.videoIndex(spark), Gazetteers.videoLabels(spark))
     val linked = store.stage("linked", metrics = Seq("links" -> count(lit(1)))) {
-      val ranksGaz = Gazetteers.ranks(spark)
       val periods = Linkers.docPeriods(pruned)
+      val dictionaries = Seq(Linkers.rankTask(Gazetteers.ranks(spark)),
+        Linkers.campTask(Gazetteers.camps(spark))) ++
+        Linkers.municipalityTasks(Gazetteers.municipalities(spark)) :+
+        Linkers.pnrDeathTask(Gazetteers.pnrPlaces(spark))
       val links =
-        Linkers.linkRanks(pruned, ranksGaz)
-          .unionByName(Linkers.linkCamps(pruned, Gazetteers.camps(spark)))
-          .unionByName(Linkers.linkMunicipalities(pruned, Gazetteers.municipalities(spark)))
-          .unionByName(Linkers.linkPnrDeathMunicipality(pruned, Gazetteers.pnrPlaces(spark)))
+        Linkers.linkDictionary(pruned, dictionaries)
           .unionByName(Linkers.linkOccupations(pruned, Gazetteers.occupations(spark)))
           .unionByName(Linkers.linkUnits(pruned, Gazetteers.units(spark), periods, Gazetteers.unitClasses(spark)))
           .unionByName(magazines._1)

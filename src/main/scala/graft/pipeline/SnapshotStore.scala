@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -116,10 +116,10 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     // data file with its byte size and row count; row-level lineage is
     // carried IN the data as the docId column
     val conf = spark.sparkContext.hadoopConfiguration
-    val fileMeta = listFilesRec(dir).filter(_.getName.endsWith(".parquet")).map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    val fileMeta = listFilesRec(dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       val n = try reader.getRecordCount finally reader.close()
-      (f, fs.getFileStatus(f).getLen, n)
+      (st.getPath, st.getLen, n)
     }
     val rows = fileMeta.map(_._3).sum
     val files = fileMeta.map { case (f, bytes, n) =>
@@ -149,8 +149,10 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
 
   /** Run-or-resume: if a committed snapshot exists, read it; otherwise
     * compute, commit, and read back (so downstream always consumes the
-    * materialized — deterministic — bytes). Metric aggregates ride the
-    * write job via observe() — a metric'd stage costs exactly one pass.
+    * materialized — deterministic — bytes). The read-back takes the
+    * computed frame's schema; only a resumed stage infers it from parquet.
+    * Metric aggregates ride the write job via observe() — a metric'd
+    * stage costs exactly one pass.
     *
     * The manifest's "sec" times the whole stage: the compute block (its
     * eager work — local checkpoints, linker pre-passes, a nested stage)
@@ -159,11 +161,14 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
             metrics: Seq[(String, Column)] = Nil,
             sortCols: Seq[String] = Nil)
            (compute: => DataFrame): DataFrame = {
-    if (!exists(name)) {
-      val t0 = System.nanoTime() // before `compute` runs: it is a strict argument
-      commit(name, compute, partitionCols, metrics, sortCols, t0)
+    if (exists(name)) read(name)
+    else {
+      val t0 = System.nanoTime()
+      val df = compute
+      val v = commit(name, df, partitionCols, metrics, sortCols, t0)
+      // the schema is the frame's own: no parquet schema-inference job
+      spark.read.schema(df.schema).parquet(versionDir(name, v).toString)
     }
-    read(name)
   }
 
   /** Pin the run's reference date (the privacy possibly-alive cutoff
@@ -204,12 +209,13 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     if (fs.exists(dir)) fs.delete(dir, true)
   }
 
-  private def listFilesRec(dir: Path): Seq[Path] = {
-    val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) buf += it.next().getPath
-    buf.toSeq
-  }
+  /** Every file under `dir`, by `listStatus`: `listFiles(dir, true)`
+    * builds a `LocatedFileStatus` per file, which on the local filesystem
+    * without native Hadoop forks an `ls -ld` per file for its permissions. */
+  private def listFilesRec(dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) listFilesRec(st.getPath) else Seq(st)
+    }
   private def rel(base: Path, p: Path): String =
     p.toString.stripPrefix(base.toString).stripPrefix("/")
   private def js(s: String): String =

@@ -16,11 +16,12 @@ import graft.model.NS
   * the reference's own test asserts subject-set preservation
   * (src/tests.py:117-129).
   *
-  * Spark shape: classification is one aggregation over the date triples;
-  * removal is `left_anti` against the (subject, predicate[, reification])
-  * hide-set; additions are small unions. The reification cascade (remove a
-  * triple ⇒ remove its 5 reification triples, prune_nonpublic.py:65-78)
-  * is a join from hidden (s,p) pairs to reification subjects.
+  * Spark shape: classification is one aggregation over the type and date
+  * triples; removal is `left_anti` against the (subject, predicate[,
+  * reification]) hide-set; additions are small unions. The reification
+  * cascade (remove a triple ⇒ remove its 5 reification triples,
+  * prune_nonpublic.py:65-78) is a join from hidden (s,p) pairs to
+  * reification subjects.
   */
 object Privacy {
 
@@ -52,7 +53,8 @@ object Privacy {
     NS.SCHEMA_POW + "recording")
 
   /** Person classification (prune_nonpublic.py:194-215).
-    * Returns (subj, cls) with cls ∈ {public, died_recently, possibly_alive}.
+    * Returns (subj, cls) with cls ∈ {public, died_recently, possibly_alive}
+    * for every non-null PrisonerRecord subject.
     * `today` has NO default on purpose: the cutoff is a run input that must
     * come from the pipeline's pinned run date (SnapshotStore.pinRunDate) —
     * a wall-clock default would make a resume across midnight classify
@@ -63,23 +65,23 @@ object Privacy {
     val cutoff = java.sql.Date.valueOf(today.minusYears(50))
     val aliveDob = java.sql.Date.valueOf(LocalDate.of(1910, 9, 30))
 
-    val persons = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord"))
-      .select($"subj").distinct()
-
-    val deaths = triples.filter($"pred" === (NS.SCHEMA_POW + "date_of_death"))
-      .select($"subj", castDateUdf($"objValue").as("d"))
+    // one pass per person: the type and date triples fold into one row
+    // per subject; subjects without a PrisonerRecord type row drop out.
+    // The explicit non-null subject is the filter every join consumer
+    // infers anyway: with it, all consumers plan the same shuffle, which
+    // AQE then computes once and reuses.
+    val death = NS.SCHEMA_POW + "date_of_death"
+    val birth = NS.SCHEMA_WARSA + "date_of_birth"
+    val isPerson = $"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord")
+    triples.filter((isPerson || $"pred".isin(death, birth)) && $"subj".isNotNull)
+      .select($"subj", $"pred", isPerson.as("person"),
+        when($"pred".isin(death, birth), castDateUdf($"objValue")).as("d"))
       .groupBy($"subj").agg(
-        max($"d").as("latest_death"), // latest (prune_nonpublic.py:204)
-        max(when($"d".isNull, 1).otherwise(0)).as("death_without_date"),
-        count(lit(1)).as("n_death"))
-
-    val dob = triples.filter($"pred" === (NS.SCHEMA_WARSA + "date_of_birth"))
-      .groupBy($"subj").agg(min(castDateUdf($"objValue")).as("dob"))
-
-    persons
-      .join(deaths, Seq("subj"), "left")
-      .join(dob, Seq("subj"), "left")
+        max($"person").as("person"),
+        max(when($"pred" === death, $"d")).as("latest_death"), // latest (prune_nonpublic.py:204)
+        max(when($"pred" === death, when($"d".isNull, 1).otherwise(0))).as("death_without_date"),
+        min(when($"pred" === birth, $"d")).as("dob"))
+      .filter($"person")
       .select($"subj",
         when(($"latest_death".isNotNull && $"latest_death" >= lit(cutoff)) ||
              $"death_without_date" === 1, "died_recently")
@@ -111,18 +113,16 @@ object Privacy {
     val spark = triples.sparkSession
     import spark.implicits._
 
-    // The classification / common-name aggregates are each consumed by
-    // several of the joins below; left lazy, every consumer re-executes
-    // the aggregation subtree inside the one pruning job. persist (not
-    // localCheckpoint) keeps lineage — fault-tolerant at cluster scale,
-    // spills to disk — and these frames are |persons|- and
-    // |family-names|-sized, orders of magnitude under the triple set.
-    import org.apache.spark.storage.StorageLevel
-    val cls = classify(triples, today).persist(StorageLevel.MEMORY_AND_DISK)
+    // The classification, common-name and family-name frames are each
+    // consumed by several of the joins below. They are left lazy: within
+    // the one pruning query AQE plans each repeated subtree's shuffle once
+    // and reuses it (`ReusedExchange`), so sharing costs no cache — a
+    // persist would add a cache-materialization job per frame and pin
+    // executor storage after the stage commits.
+    val cls = classify(triples, today)
     val hidden = cls.filter($"cls" =!= "public") // health hidden for both
     val alive = cls.filter($"cls" === "possibly_alive")
     val common = commonNames(triples, endpointNames)
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // family names of possibly-alive records, flagged common/uncommon
     val aliveFamily = triples.filter($"pred" === (NS.SCHEMA_WARSA + "family_name"))
@@ -131,7 +131,6 @@ object Privacy {
         $"objValue" === $"family", "left")
       .select($"subj", $"objValue".as("family"),
         coalesce($"is_common", lit(false)).as("is_common"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- build the hide-set of (subj, pred) pairs ------------------------
     val hideHealth = hidden.select($"subj")
@@ -146,7 +145,6 @@ object Privacy {
     val captivityOf = triples.filter($"pred" === (NS.SCHEMA_POW + "captivity"))
       .select($"subj", $"objValue".as("captivity"))
       .join(alive.select("subj"), Seq("subj"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val hideCaptivityLabels = captivityOf
       .select($"captivity".as("subj"), lit(NS.SKOS_PREF_LABEL).as("hpred")).distinct()

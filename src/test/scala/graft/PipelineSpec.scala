@@ -208,6 +208,44 @@ class PipelineSpec extends AnyFunSuite {
       "final store not partitioned by predicate")
   }
 
+  test("a fresh pipeline run stays within its Spark job budget") {
+    // one pass per entity in pruning, linking and person features, the
+    // batched dictionary linker, the driver-side class closure and the
+    // schema-carrying snapshot read-back took a fresh run on this corpus
+    // from 209 jobs to 131 (local[4], 4 shuffle partitions); the budget
+    // is that count plus 10%
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val docs = SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir)
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val marker = "marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val seenMarker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("run") => jobs.incrementAndGet()
+          case Some(`marker`) => seenMarker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "run")
+      Pipeline.run(spark, docs, dir, today)
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the run has been counted
+      sc.setLocalProperty(key, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(seenMarker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    val budget = 144
+    assert(jobs.get() <= budget, s"fresh Pipeline.run took ${jobs.get()} Spark jobs, budget $budget")
+  }
+
   test("privacy: subjects preserved, possibly-alive redacted (tests.py:117-129)") {
     import graft.privacy.Privacy
     val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")

@@ -4,6 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestBase {
+  /** The 500-document sf0.001 corpus vendored with the benchmark
+    * (`documents.parquet`), relative to the checkout root. */
+  val corpusDir = "perfbench/data"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
