@@ -59,8 +59,8 @@ object SparkEntry {
     * so the bench keeps measuring candidate generation at sf scale; the
     * oracle then pins the deterministic planted GROUPS (pair-level
     * semantics stay pinned by OpsSpec's planted goldens). */
-  private val PlantBase = 9000000000L
-  private def plantedDocs(s: SparkSession): DataFrame = {
+  private[graft] val PlantBase = 9000000000L
+  private[graft] def plantedDocs(s: SparkSession): DataFrame = {
     import s.implicits._
     Seq(
       (PlantBase + 10, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),

@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   *  - exact dedup groups on a 128-bit digest, never on the full text —
   *    the shuffle carries 32 bytes/doc, not the document;
   *  - MinHash banding turns all-pairs into per-bucket joins; hot buckets
-  *    (boilerplate shingles) are capped with a document-frequency filter —
-  *    the same skew-mitigation idea the north rule requires for hot
-  *    entities;
+  *    (boilerplate shingles) are capped at `maxBucket` comparisons per row
+  *    by salted rank chaining ([[chainedBucketPairs]]) — the same
+  *    skew-mitigation idea the north rule requires for hot entities;
+  *  - MinHash and n-gram Jaccard share one gram representation
+  *    ([[gramHashes]]: sorted distinct shingle hashes) and one exact
+  *    verifier ([[jaccardVerified]]);
   *  - SimHash pairs only within 16-bit band collisions (4 bands → Hamming
   *    distance ≤ 3 guaranteed recall by pigeonhole).
   */
@@ -220,24 +223,40 @@ object Dedup {
     docs.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Word 3-gram shingles as a distinct array column.
-    *
-    * NOTE: `text` is tokenized INSIDE the transform lambda body here, so
-    * when this inline form lands in a single projection the tokenizer is
-    * re-evaluated per shingle position (the CollapseProject lambda trap).
-    * Fine for tests/small frames; the hot paths materialize a token
-    * column first and use [[shinglesFromTokens]]. */
-  def shingles(text: Column, n: Int = 3): Column =
-    shinglesFromTokens(tokens(text), n)
+  /** Word 3-gram hashes per document: `(id, g)`, where `g` holds the
+    * distinct xxhash64 values of the doc's shingles, sorted by value. The
+    * fused codegen expression ([[graft.functions.ShingleHash64Expression]])
+    * hashes each window's bytes directly, so no shingle string is ever
+    * materialized (the concat_ws/slice string stage was ~2 s of a 2.1 s
+    * pass over 100k docs). Jaccard over these sets equals Jaccard over the
+    * shingle strings unless two distinct shingles collide in xxhash64
+    * (ShingleHashSpec pins the hashes on the corpus). Null text has no
+    * grams: `g` is null and the doc pairs with nothing. */
+  private def gramHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), array_sort(graft.functions.ShingleHash64Expression
+      .shingleHash64(tokens(col(textCol)), 3)).as("g"))
 
-  /** Shingles over an already-MATERIALIZED token array attribute: the
-    * attribute is referenced twice (sequence bound + lambda slice), which
-    * blocks CollapseProject from inlining the tokenizer into the lambda
-    * body — tokens evaluate once per row, not once per shingle. */
-  def shinglesFromTokens(toks: Column, n: Int = 3): Column =
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(toks) - n, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+  /** Exact Jaccard verification of candidate `(id_a, id_b)` pairs: both
+    * sides' `(id, g)` gram arrays ([[gramHashes]]) join back by id and
+    * |∩| comes from one sorted two-pointer merge
+    * ([[graft.functions.SortedIntersectCountExpression]], equal to
+    * `size(array_intersect)` on distinct value-sorted arrays, pinned by
+    * SortedIntersectSpec). Emits `(id_a, id_b, jaccard)` at
+    * `jaccard >= threshold`. */
+  private def jaccardVerified(pairs: DataFrame, grams: DataFrame,
+                              threshold: Double): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    pairs
+      .join(grams.select($"id".as("id_a"), $"g".as("g_a")), Seq("id_a"))
+      .join(grams.select($"id".as("id_b"), $"g".as("g_b")), Seq("id_b"))
+      .withColumn("inter",
+        graft.functions.SortedIntersectCountExpression.sortedIntersectCount($"g_a", $"g_b"))
+      .withColumn("jaccard",
+        $"inter" / (size($"g_a") + size($"g_b") - $"inter"))
+      .filter($"jaccard" >= threshold)
+      .select($"id_a", $"id_b", $"jaccard")
+  }
 
   /** MinHash signature over pre-hashed shingles: each shingle string is
     * hashed ONCE to a long, then the `numHashes` families re-mix the longs
@@ -254,15 +273,10 @@ object Dedup {
   def minhashSignatureFromHashes(hs: Column, numHashes: Int): Column =
     graft.functions.MinhashSignatureExpression.minhashSignature(hs, numHashes)
 
-  /** Convenience one-shot form — inlines the shingle hashing `numHashes`
-    * times, so use only on small frames/tests; production paths
-    * materialize `hs` first (see [[minhashSignatureFromHashes]]). */
-  def minhashSignature(text: Column, numHashes: Int = 64): Column =
-    minhashSignatureFromHashes(transform(shingles(text), s => xxhash64(s)), numHashes)
-
   /** MinHash LSH candidate pairs: signatures banded `bands` × `rowsPerBand`;
     * docs sharing any band bucket become a candidate pair; pairs are then
-    * exactly verified with shingle-set Jaccard and filtered at `threshold`.
+    * verified with exact Jaccard over the word 3-gram hash sets
+    * ([[jaccardVerified]]) and filtered at `threshold`.
     *
     * `maxBucket` caps pathological buckets (all-identical boilerplate):
     * a bucket with more than `maxBucket` docs contributes capped pairs via
@@ -276,29 +290,15 @@ object Dedup {
     import spark.implicits._
     val rowsPerBand = numHashes / bands
 
-    // shingle STRING sets computed in a narrow pass for the two exact-
-    // jaccard verification joins, which re-derive them from the scan
-    // rather than shuffling the shingle arrays through the candidate
-    // join (the banding path hashes windows directly, below) — at scale
-    // re-reading the (columnar, pruned) text column is cheaper than paying
-    // the payload through every exchange of the pairing. Deliberately NOT
+    // one gram frame for signing and verification. Deliberately NOT
     // checkpointed (unlike the ngram index): a materialization barrier here
-    // blocks downstream pair-id filters from pushing into the payload
+    // blocks downstream pair-id filters from pushing into the verification
     // sides — measured on the planted-gate query, the pushed filter prunes
-    // each verification side to the planted rows and beats the saved
-    // re-tokenization (2.0 → 2.5 s checkpointed).
-    val sh = docs
-      .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
-      .select(col(idCol).as("id"), shinglesFromTokens(col("__toks")).as("sh"))
+    // each side to the planted rows and beats the saved re-tokenization
+    // (2.0 → 2.5 s checkpointed). The min-fold signature ignores element
+    // order, so signing the value-sorted `g` gives the same signature.
+    val grams = gramHashes(docs, idCol, textCol)
 
-    // `hs` comes from the fused shingle-hash codegen expression DIRECTLY
-    // off the token array — the banding path never materializes shingle
-    // strings (they were ~2 s of a 2.1 s pass at 100k docs; the string
-    // form `sh` below survives only for the exact-jaccard verification
-    // joins). Signature identical: distinct-by-hash vs distinct-by-string
-    // differ only on xxhash64 collisions, and the min-fold signature is
-    // insensitive to duplicates either way (ShingleHashSpec +
-    // MinhashSignatureSpec pin both halves).
     // `sk`/`sk2` = first and last signature elements — two INDEPENDENT
     // hash families: equal-element probability between two docs IS their
     // Jaccard similarity (the minhash property), so the cluster stars /
@@ -308,11 +308,8 @@ object Dedup {
     // (probability (1−J)² instead of (1−J)). The extra syntactic `sig`
     // references also pin `sig` as its own projection (multiply-referenced
     // non-cheap expressions block CollapseProject).
-    val banded = docs
-      .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
-      .select(col(idCol).as("id"),
-        graft.functions.ShingleHash64Expression.shingleHash64(col("__toks"), 3).as("hs"))
-      .withColumn("sig", minhashSignatureFromHashes($"hs", numHashes))
+    val banded = grams
+      .withColumn("sig", minhashSignatureFromHashes($"g", numHashes))
       .select($"id", element_at($"sig", 1).as("sk"),
         element_at($"sig", numHashes).as("sk2"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -320,15 +317,10 @@ object Dedup {
       .select($"id", $"sk", $"sk2", concat($"pos", lit(":"), $"col").as("bucket"))
 
     // id-only candidate pairing (offset-exploded equi-join, salted ranks);
-    // shingles join back by id for exact Jaccard verification
-    chainedBucketPairs(banded.select($"bucket", $"id", $"sk", $"sk2"), maxBucket, salts = 16)
-      .join(sh.select($"id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
-      .join(sh.select($"id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect($"sh_a", $"sh_b")))
-      .withColumn("jaccard",
-        $"inter" / (size($"sh_a") + size($"sh_b") - $"inter"))
-      .filter($"jaccard" >= threshold)
-      .select($"id_a", $"id_b", $"jaccard")
+    // grams join back by id for exact Jaccard verification
+    jaccardVerified(
+      chainedBucketPairs(banded.select($"bucket", $"id", $"sk", $"sk2"), maxBucket, salts = 16),
+      grams, threshold)
   }
 
   /** SimHash near-duplicates: 64-bit simhash, candidates = equal 16-bit
@@ -349,7 +341,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     // NOT checkpointed — same pushdown-transparency reasoning as the
-    // minhash `sh` frame: downstream pair-id filters prune these
+    // minhash `grams` frame: downstream pair-id filters prune these
     // re-derived sides to the filtered rows, which a materialization
     // barrier would forfeit
     val sigs = docs.select(col(idCol).as("id"),
@@ -396,30 +388,19 @@ object Dedup {
 
   /** Exact n-gram Jaccard similarity join with PREFIX FILTERING (the
     * SSJoin/PPJoin blocking idea — public algorithm, Chaudhuri et al.
-    * ICDE'06): order each doc's shingles by a global order (their hash),
-    * index only the first ⌊(1-t)·|sh|⌋+1 of them — any pair with
+    * ICDE'06): order each doc's shingles by a global order (ascending
+    * document frequency, then hash), index only the first
+    * ⌊(1-t)·|g|⌋+1 of them — any pair with
     * J ≥ t MUST share a prefix shingle, so recall is complete while the
     * inverted index and the candidate join shrink superlinearly with t.
-    * Verification is exact (`array_intersect` on the full sets), so the
-    * result is identical to the unblocked all-pairs join. A per-shingle
-    * document-frequency cap additionally drops boilerplate stop-shingles
-    * (hot-key mitigation); it is OFF by default because it can cost
-    * recall — enable for corpora with known boilerplate. */
+    * Verification is exact ([[jaccardVerified]] on the full gram sets),
+    * so the result is identical to the unblocked all-pairs join. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    // shingles hashed once to longs: jaccard over hashed sets equals
-    // jaccard over string sets up to xxhash64 collisions (negligible at
-    // dozens of grams per doc). The fused codegen expression hashes each
-    // window's bytes directly — no shingle string is materialized
-    // (measured: the concat_ws/slice string stage alone was ~2 s of a
-    // 2.1 s pass over 100k docs; equivalence pinned by ShingleHashSpec).
-    val grams = docs
-      .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
-      .select(col(idCol).as("id"), explode(
-        graft.functions.ShingleHash64Expression.shingleHash64(col("__toks"), 3)).as("g"))
+    val grams = gramHashes(docs, idCol, textCol).select($"id", explode($"g").as("g"))
 
     // global order = ASCENDING document frequency (rare-first): the whole
     // point of prefix filtering — a doc's prefix holds its RAREST shingles,
@@ -442,18 +423,15 @@ object Dedup {
     val perDoc = grams.withColumn("df", count(lit(1)).over(dfw))
       .groupBy($"id")
       .agg(sort_array(collect_list(struct($"df", $"g"))).as("ordered"))
-      // `sh` re-sorted ASCENDING BY GRAM VALUE (element order is free —
-      // only set semantics reach the output): verification can then count
-      // the intersection with one O(|a|+|b|) sorted two-pointer merge
-      // instead of a hash probe per pair. The PREFIX stays in the
-      // rare-first (df, g) order — that ordering is what makes prefix
-      // filtering work.
-      .withColumn("sh", array_sort(transform($"ordered", o => o("g"))))
-      .withColumn("sz", size($"sh"))
+      // `g` re-sorted ASCENDING BY GRAM VALUE, the form
+      // [[jaccardVerified]] merges. The PREFIX stays in the rare-first
+      // (df, g) order — that ordering is what makes prefix filtering work.
+      .withColumn("g", array_sort(transform($"ordered", o => o("g"))))
+      .withColumn("sz", size($"g"))
       .withColumn("prefix", transform(
         slice($"ordered", lit(1), (floor($"sz" * (1 - threshold)) + 1).cast("int")),
         o => o("g")))
-      .select($"id", $"sh", $"sz", $"prefix")
+      .select($"id", $"g", $"sz", $"prefix")
       .localCheckpoint()
 
     // positions ride the inverted index for PPJoin POSITIONAL filtering
@@ -485,7 +463,7 @@ object Dedup {
       .filter(least($"sz_a" - $"pa0", $"sz_b" - $"pb0") * (1.0 + threshold) >=
         ($"sz_a" + $"sz_b") * threshold - 1e-9)
       .select($"id_a", $"id_b")
-      // verification is COMPUTE-bound (array_intersect per pair), not
+      // verification is COMPUTE-bound (a sorted merge per pair), not
       // byte-bound: AQE sizes the post-aggregation exchange by bytes and
       // coalesces a few MB of candidate ids into ONE partition, serializing
       // every intersect into a single task (measured 2.4-3.7 s single-core
@@ -493,19 +471,7 @@ object Dedup {
       // id-pair exchange is tiny.
       .repartition(spark.sparkContext.defaultParallelism, $"id_a")
 
-    pairs
-      .join(perDoc.select($"id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
-      .join(perDoc.select($"id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
-      // exact |∩| via the sorted-merge codegen expression (arrays are
-      // distinct + value-sorted by construction above; equivalence to
-      // size(array_intersect) pinned by SortedIntersectSpec)
-      .withColumn("inter",
-        graft.functions.SortedIntersectCountExpression
-          .sortedIntersectCount($"sh_a", $"sh_b"))
-      .withColumn("jaccard",
-        $"inter" / (size($"sh_a") + size($"sh_b") - $"inter"))
-      .filter($"jaccard" >= threshold)
-      .select($"id_a", $"id_b", $"jaccard")
+    jaccardVerified(pairs, perDoc, threshold)
   }
 }
 

@@ -52,16 +52,7 @@ object Similarity {
       h.toDouble / Int.MaxValue
     }
 
-  /** All `tables` sign sketches of a vector in ONE batched primitive pass
-    * (tables × bits dot products over preallocated plane arrays). The
-    * previous form was a per-bit zip_with/aggregate expression TREE against
-    * a literal matrix — semantically identical but it evaluated `bits`
-    * array allocations per row and dominated the bench (8.5 s of a 30 s
-    * suite at sf0.1). One UDF invocation per row with while-loops is the
-    * faster shape here; the planes ride the closure, no broadcast needed. */
-  /** One table's sign sketch over preallocated planes — the single
-    * implementation both the batch UDF and [[signSketch]] call, so the
-    * sign rule / double math can never desynchronize between them. */
+  /** One table's sign sketch over preallocated planes. */
   private def sketchOne(planes: Array[Array[Double]], vec: Array[Double],
                         bits: Int, dims: Int): Long = {
     val n = math.min(dims, vec.length)
@@ -78,6 +69,13 @@ object Similarity {
     sketch
   }
 
+  /** All `tables` sign sketches of a vector in ONE batched primitive pass
+    * (tables × bits dot products over preallocated plane arrays). The
+    * previous form was a per-bit zip_with/aggregate expression TREE against
+    * a literal matrix — semantically identical but it evaluated `bits`
+    * array allocations per row and dominated the bench (8.5 s of a 30 s
+    * suite at sf0.1). One UDF invocation per row with while-loops is the
+    * faster shape here; the planes ride the closure, no broadcast needed. */
   private def sketchAllUdf(bits: Int, tables: Int, dims: Int) = {
     val planes = planeArrays(bits, tables, dims)
     // typed Seq[Double]: Spark upcasts array<float> input losslessly, so
@@ -101,19 +99,6 @@ object Similarity {
     val sk = sketchAllUdf(bits, tables, dims)
     df.select(col(id), col(vec), posexplode(sk(col(vec))))
       .select(col(id), col(vec), concat(col("pos"), lit(":"), col("col")).as("bucket"))
-  }
-
-  /** Sign sketch for one LSH table, as a Column (kept for tests/ad-hoc
-    * use; the batch paths use [[sketchAllUdf]]). Computes ONLY this
-    * table's planes — a per-table loop over signSketch is O(tables), not
-    * O(tables²). */
-  def signSketch(vec: Column, table: Int, bits: Int, dims: Int): Column = {
-    val planes = planeArrays(bits, table + 1, dims)(table)
-    val one = udf { (v: Seq[Double]) =>
-      if (v == null) null.asInstanceOf[java.lang.Long]
-      else java.lang.Long.valueOf(sketchOne(planes, v.toArray, bits, dims))
-    }
-    one(vec)
   }
 
   /** LSH-bucketed approximate cosine top-k: candidates must share at least
@@ -245,14 +230,14 @@ object Similarity {
         .sorted.take(nprobe).map(_._2).toArray
     }
 
-    val q = broadcast(queries
+    val q = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeUdf(col(vecCol).cast("array<double>"))).as("cell")))
+        explode(probeUdf(col(vecCol).cast("array<double>"))).as("cell"))
     val probedCells = q.select($"cell").distinct().as[Int].collect().sorted
     val cand = indexed
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), $"cell")
       .filter($"cell".isin(probedCells.map(Int.box): _*))
-      .join(q, Seq("cell"))
+      .join(broadcast(q), Seq("cell"))
       .filter($"neighbor_id" =!= $"query_id")
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("cos", cosine($"qv".cast("array<double>"), $"cv".cast("array<double>")))

@@ -91,17 +91,6 @@ object TextAnalysis {
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token")).limit(k)
 
-  /** Non-distinct token bigrams over a MATERIALIZED token-array attribute
-    * (repetition signals need multiplicity; the dedup shingles are
-    * distinct by design). Takes the token ARRAY, not the text: a Column is
-    * an AST, so an inline `split` argument would be duplicated into the
-    * lambda body and re-run per gram (see [[fingerprints]]). Shares the
-    * degenerate short-doc convention of [[graft.ops.Dedup.shingles]]: a
-    * doc with fewer tokens than the gram width yields one truncated gram. */
-  def bigrams(toks: Column): Column =
-    transform(sequence(lit(0), greatest(size(toks) - 2, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(2))))
-
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1 — public):
     * per doc, the most-frequent bigram's count and the total bigram
     * count, as exact integers (consumers compute the fraction; exact

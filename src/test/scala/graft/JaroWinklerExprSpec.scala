@@ -46,7 +46,7 @@ class JaroWinklerExprSpec extends AnyFunSuite {
     assert(withNull.isNullAt(0))
     // against a real scan (a local Seq constant-folds away), the plan stays
     // inside WholeStageCodegen with no ScalaUDF boundary — and evaluates
-    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val real = spark.read.parquet(s"${SparkTestBase.corpusDir}/documents.parquet")
       .select($"source", $"lang",
         JaroWinklerExpression.jaroWinkler($"source", $"lang").as("jw"))
     val plan = real.queryExecution.executedPlan.toString()

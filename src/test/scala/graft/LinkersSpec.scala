@@ -18,7 +18,7 @@ class LinkersSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val triples =
-    Extraction.triples(SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")).toDF()
+    Extraction.triples(SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir)).toDF()
       .persist()
 
   /** triples + rank/municipality/occupation links — the graph state person

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.MaxRunLengthExpression
@@ -16,6 +16,13 @@ class MaxRunLengthSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
+
+  /** Non-distinct string bigrams over a materialized token array: a doc
+    * with fewer than 2 tokens yields one truncated gram, the same window
+    * count as `shingleHash64(toks, 2, distinct = false)`. */
+  private def bigrams(toks: Column): Column =
+    transform(sequence(lit(0), greatest(size(toks) - 2, lit(0))),
+      i => concat_ws(" ", slice(toks, i + 1, lit(2))))
 
   /** The original formulation of `TextAnalysis.repetitionCounts`. */
   private def reference(docs: DataFrame): DataFrame = {
@@ -33,7 +40,7 @@ class MaxRunLengthSpec extends AnyFunSuite {
       },
       acc => acc.getField("best"))
     docs.withColumn("__rep_toks", TextAnalysis.tokens(lower($"text")))
-      .withColumn("__rep_sorted", array_sort(TextAnalysis.bigrams(col("__rep_toks"))))
+      .withColumn("__rep_sorted", array_sort(bigrams(col("__rep_toks"))))
       .select($"doc_id", top.cast("long").as("top_gram_count"),
         n.cast("long").as("n_grams"))
   }

@@ -36,7 +36,7 @@ class MinhashSignatureSpec extends AnyFunSuite {
     val hs = docs
       .withColumn("__toks", graft.ops.TextAnalysis.tokens(col("text")))
       .select(col("doc_id"),
-        transform(Dedup.shinglesFromTokens(col("__toks")), s => xxhash64(s)).as("hs"))
+        transform(ShingleHashSpec.shinglesFromTokens(col("__toks")), s => xxhash64(s)).as("hs"))
     val both = hs.select(col("doc_id"),
         Dedup.minhashSignatureFromHashes(col("hs"), 64).as("fused"),
         minhashSignatureReference(col("hs"), 64).as("ref"))

@@ -56,7 +56,7 @@ class OpsSpec extends AnyFunSuite {
   test("simhash64 is a native codegen expression (no ScalaUDF boundary)") {
     // parquet source, not the local fixture — ConvertToLocalRelation would
     // constant-fold a LocalRelation projection away before the check
-    val plan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val plan = spark.read.parquet(s"${SparkTestBase.corpusDir}/documents.parquet")
       .select(graft.ops.Simhash.simhash64(
         graft.ops.TextAnalysis.tokens($"text")).as("sig"))
       .queryExecution.executedPlan.toString
@@ -151,7 +151,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("IVF persisted index: probe plan prunes unprobed cell partitions") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${SparkTestBase.corpusDir}/embeddings.parquet")
       .select("vec_id", "embedding")
     val (centroids, indexed) = Similarity.ivfIndex(emb, k = 16, iters = 2)
     val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
@@ -188,7 +188,7 @@ class OpsSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted.toSeq)
     val corpus = plantedCorpus
     assert(run(corpus) == run(corpus.repartition(7)))
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${SparkTestBase.corpusDir}/embeddings.parquet")
       .select("vec_id", "embedding")
     def runAnn(df: org.apache.spark.sql.DataFrame) =
       Similarity.nearDuplicatePairsLsh(df, threshold = 0.3, bits = 8)
@@ -529,7 +529,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("cosine top-k: self excluded, ranks deterministic, exact vs lsh consistent") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${SparkTestBase.corpusDir}/embeddings.parquet")
     val q = emb.filter($"vec_id" < 3)
     val exact = Similarity.cosineTopK(emb, q, k = 5).collect()
     assert(exact.length == 15)
@@ -554,7 +554,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("ANN self-join: finds identical vectors, bounded on adversarial input") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${SparkTestBase.corpusDir}/embeddings.parquet")
       .select("vec_id", "embedding")
     // plant an exact duplicate of vec 0 under a fresh id
     val dup = emb.filter($"vec_id" === 0).select(lit(999999L).as("vec_id"), $"embedding")
@@ -584,7 +584,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("IVF: deterministic cells, probe search finds the planted duplicate") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = spark.read.parquet(s"${SparkTestBase.corpusDir}/embeddings.parquet")
       .select("vec_id", "embedding")
     val dup = emb.filter($"vec_id" === 0).select(lit(999999L).as("vec_id"), $"embedding")
     val corpus = emb.unionByName(dup)
@@ -633,7 +633,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("multimodal: schema, batched stub decode, frame sampling") {
     val media = Multimodal.mediaTable(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
+      spark.read.parquet(s"${SparkTestBase.corpusDir}/documents.parquet"))
     assert(media.schema("payload").dataType.typeName == "binary")
     val feats = Multimodal.extractFeatures(media)
     val f = feats.head()

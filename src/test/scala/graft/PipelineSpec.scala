@@ -115,7 +115,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("full pipeline over synthetic docs: stages commit, output sane, resume identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
-    val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")
+    val docs = SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir)
 
     val out1 = Pipeline.run(spark, docs, dir, today)
     val n1 = out1.count()
@@ -248,7 +248,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("privacy: subjects preserved, possibly-alive redacted (tests.py:117-129)") {
     import graft.privacy.Privacy
-    val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")
+    val docs = SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir)
     val triples = graft.extract.Extraction.triples(docs).toDF()
     val endpoint = Seq(("Virtanen", 3L), ("Korhonen", 5L)).toDF("fam", "count")
 

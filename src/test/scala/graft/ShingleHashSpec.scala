@@ -1,10 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.ShingleHash64Expression
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.TextAnalysis
 
 /** Pins the fused shingle-hash expression against the reference pipeline
   * (shinglesFromTokens string distinct, then xxhash64 per shingle) —
@@ -18,7 +19,7 @@ class ShingleHashSpec extends AnyFunSuite {
   private def compare(tokArrays: Seq[Seq[String]], n: Int): Unit = {
     val df = tokArrays.map(Tuple1(_)).toDF("toks")
       .withColumn("fast", ShingleHash64Expression.shingleHash64($"toks", n))
-      .withColumn("ref", transform(Dedup.shinglesFromTokens($"toks", n), s => xxhash64(s)))
+      .withColumn("ref", transform(ShingleHashSpec.shinglesFromTokens($"toks", n), s => xxhash64(s)))
       .collect()
     df.zipWithIndex.foreach { case (r, i) =>
       assert(r.getSeq[Long](r.fieldIndex("fast")) == r.getSeq[Long](r.fieldIndex("ref")),
@@ -39,11 +40,11 @@ class ShingleHashSpec extends AnyFunSuite {
   }
 
   test("matches the reference on the real corpus tokenization") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${SparkTestBase.corpusDir}/documents.parquet")
       .withColumn("toks", TextAnalysis.tokens($"text"))
     val diff = docs
       .withColumn("fast", ShingleHash64Expression.shingleHash64($"toks", 3))
-      .withColumn("ref", transform(Dedup.shinglesFromTokens($"toks"), s => xxhash64(s)))
+      .withColumn("ref", transform(ShingleHashSpec.shinglesFromTokens($"toks"), s => xxhash64(s)))
       .filter(not($"fast" <=> $"ref"))
       .count()
     assert(diff == 0)
@@ -53,7 +54,7 @@ class ShingleHashSpec extends AnyFunSuite {
     val df = Seq(Tuple1(Seq[String]("a", null, "b", "c")))
       .toDF("toks")
       .withColumn("fast", ShingleHash64Expression.shingleHash64($"toks", 3))
-      .withColumn("ref", transform(Dedup.shinglesFromTokens($"toks"), s => xxhash64(s)))
+      .withColumn("ref", transform(ShingleHashSpec.shinglesFromTokens($"toks"), s => xxhash64(s)))
       .head()
     assert(df.getSeq[Long](df.fieldIndex("fast")) == df.getSeq[Long](df.fieldIndex("ref")))
   }
@@ -89,4 +90,17 @@ class ShingleHashSpec extends AnyFunSuite {
     compare(toks, n = 2)
     compare(toks, n = 5)
   }
+}
+
+object ShingleHashSpec {
+
+  /** The string form of the word n-gram shingle set: distinct
+    * `concat_ws(" ", slice(toks, j+1, n))` windows over a materialized
+    * token array (a short doc yields one truncated window, an empty array
+    * the empty string). `ShingleHash64Expression` hashes exactly these
+    * strings without building them. */
+  def shinglesFromTokens(toks: Column, n: Int = 3): Column =
+    array_distinct(transform(
+      sequence(lit(0), greatest(size(toks) - n, lit(0))),
+      i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
 }

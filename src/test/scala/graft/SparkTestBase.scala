@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestBase {
-  /** The 500-document sf0.001 corpus vendored with the benchmark
-    * (`documents.parquet`), relative to the checkout root. */
+  /** The sf0.001 tables vendored with the benchmark (the 500-document
+    * `documents.parquet`, `embeddings.parquet`), relative to the checkout
+    * root. */
   val corpusDir = "perfbench/data"
 
   lazy val spark: SparkSession = {

@@ -16,7 +16,7 @@ class StreamingSpec extends AnyFunSuite {
     val outDir = s"$base/triples"
     val ckpt = s"$base/ckpt"
 
-    val all = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001").cache()
+    val all = SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir).cache()
     val first = all.filter($"doc_id" < "prisoner_3") // string compare: subset
     val second = all.filter($"doc_id" >= "prisoner_3")
 
@@ -48,7 +48,7 @@ class StreamingSpec extends AnyFunSuite {
     val outDir = s"$base/docs_unique"
     val ckpt = s"$base/ckpt"
 
-    val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")
+    val docs = SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir)
       .limit(50)
       .withColumn("ingest_ts", to_timestamp(lit("2026-01-01 10:00:00")))
       .cache()

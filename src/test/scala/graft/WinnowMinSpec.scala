@@ -48,7 +48,7 @@ class WinnowMinSpec extends AnyFunSuite {
 
   test("matches the reference through the real fingerprint pipeline") {
     import graft.ops.TextAnalysis
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${SparkTestBase.corpusDir}/documents.parquet")
     val toks = col("__t")
     val grams = col("__g")
     val both = docs.withColumn("__t", TextAnalysis.tokens($"text"))
