@@ -3,7 +3,7 @@ package graft.canon
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.model.NS
+import graft.model.Triples
 
 /** Connected components over link edges + canonical-id rewrite —
   * the canonicalization stage (north rule; SURVEY.md §4 "iterative
@@ -239,12 +239,12 @@ object ConnectedComponents {
       .join(m1, Seq("subj"), "left")
       .withColumn("obj_node", when($"objIsUri", $"objValue"))
       .join(m2, Seq("obj_node"), "left")
-      .select(
-        coalesce($"subj_canon", $"subj").as("subj"),
+      .select(Triples.columns(
+        coalesce($"subj_canon", $"subj"),
         $"pred",
-        coalesce($"obj_canon", $"objValue").as("objValue"),
-        $"objIsUri", $"objLang", $"objDatatype", $"docId")
-      .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+        coalesce($"obj_canon", $"objValue"),
+        $"objIsUri", $"objLang", $"objDatatype", $"docId"): _*)
+      .transform(Triples.distinct)
   }
 
   /** Link triples (P70_documents / sameAs-shaped) → edges. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.link.Normalize
-import graft.model.NS
+import graft.model.{NS, Triples}
 
 /** Probabilistic person record linkage (SURVEY.md §2.4 J9) — the Spark-
   * native replacement for the reference's `dedupe`-based active-learning
@@ -221,11 +221,9 @@ object RecordLinkage {
     val links = scorePairs(candidatePairs(feats, personsGaz), feats, personsGaz, threshold)
     val spark = triples.sparkSession
     import spark.implicits._
-    links.select($"prisoner".as("subj"),
-      lit(NS.CRM + "P70_documents").as("pred"),
-      $"person".as("objValue"), lit(true).as("objIsUri"),
-      lit(null).cast("string").as("objLang"),
-      lit(null).cast("string").as("objDatatype"),
-      regexp_replace($"prisoner", NS.DATA, "").as("docId"))
+    // docId: the prisoner URI without its data-namespace prefix (quoted:
+    // the namespace's dots are literal)
+    links.select(Triples.uri($"prisoner", lit(NS.CRM + "P70_documents"), $"person",
+      regexp_replace($"prisoner", "^" + java.util.regex.Pattern.quote(NS.DATA), "")): _*)
   }
 }

@@ -3,7 +3,8 @@ package graft.events
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.model.NS
+import graft.model.{NS, Triples}
+import graft.model.Triples.{literal, uri}
 
 /** Person/event materialization — ports of the reference's 8 SPARQL
   * CONSTRUCT queries (reference: sparql/construct_*.sparql, invoked
@@ -81,12 +82,6 @@ object Events {
         concat(coalesce(concat($"fn", lit(" ")), lit("")), coalesce($"sn", lit(""))))
   }
 
-  private def row(subj: Column, pred: String, obj: Column, isUri: Boolean,
-                  lang: String, dt: String, docId: Column): Column =
-    struct(subj.as("subj"), lit(pred).as("pred"), obj.as("objValue"),
-      lit(isUri).as("objIsUri"), lit(lang).cast("string").as("objLang"),
-      lit(dt).cast("string").as("objDatatype"), docId.as("docId"))
-
   /** Emit a Time-Span resource + typed event with fi/en labels — the
     * shared shape of births/deaths/captures/disappearances
     * (construct_births.sparql:14-27 etc.). */
@@ -99,22 +94,27 @@ object Events {
       .withColumn("event", concat(lit(EVENTS_NS + eventKind + "_"), $"pid"))
       .withColumn("ts", concat(lit(TIMES), col(dateCol), lit("-"), col(dateCol)))
 
-    val rows = array(
-      row($"event", NS.RDF_TYPE, lit(NS.SCHEMA_WARSA + eventClass), true, null, null, $"docId"),
-      row($"event", participantPred, $"id", true, null, null, $"docId"),
-      row($"event", NS.CRM + "P4_has_time-span", $"ts", true, null, null, $"docId"),
-      row($"event", NS.DCT_SOURCE, lit(SOURCE22), true, null, null, $"docId"),
-      row($"event", NS.SKOS_PREF_LABEL, concat($"label", lit(labelFi)), false, "fi", null, $"docId"),
-      row($"event", NS.SKOS_PREF_LABEL, concat($"label", lit(labelEn)), false, "en", null, $"docId"),
-      row($"ts", NS.RDF_TYPE, lit(NS.CRM + "E52_Time-Span"), true, null, null, $"docId"),
-      row($"ts", NS.SKOS_PREF_LABEL, col(rawCol), false, "fi", null, $"docId"),
-      row($"ts", NS.SKOS_PREF_LABEL, col(rawCol), false, "en", null, $"docId"),
-      row($"ts", NS.CRM + "P82a_begin_of_the_begin", col(dateCol), false, null, NS.XSD_DATE, $"docId"),
-      row($"ts", NS.CRM + "P82b_end_of_the_end", col(dateCol), false, null, NS.XSD_DATE, $"docId"))
+    val (event, ts, doc) = ($"event", $"ts", $"docId")
+    val label = lit(NS.SKOS_PREF_LABEL)
+    val rows = array(Seq(
+      uri(event, lit(NS.RDF_TYPE), lit(NS.SCHEMA_WARSA + eventClass), doc),
+      uri(event, lit(participantPred), $"id", doc),
+      uri(event, lit(NS.CRM + "P4_has_time-span"), ts, doc),
+      uri(event, lit(NS.DCT_SOURCE), lit(SOURCE22), doc),
+      literal(event, label, concat($"label", lit(labelFi)), lit("fi"), docId = doc),
+      literal(event, label, concat($"label", lit(labelEn)), lit("en"), docId = doc),
+      uri(ts, lit(NS.RDF_TYPE), lit(NS.CRM + "E52_Time-Span"), doc),
+      literal(ts, label, col(rawCol), lit("fi"), docId = doc),
+      literal(ts, label, col(rawCol), lit("en"), docId = doc),
+      literal(ts, lit(NS.CRM + "P82a_begin_of_the_begin"), col(dateCol),
+        datatype = lit(NS.XSD_DATE), docId = doc),
+      literal(ts, lit(NS.CRM + "P82b_end_of_the_end"), col(dateCol),
+        datatype = lit(NS.XSD_DATE), docId = doc),
+    ).map(Triples.struct): _*)
 
     val placeRows = base.filter(col(placeCol).isNotNull)
-      .select(explode(array(
-        row($"event", NS.CRM + "P7_took_place_at", col(placeCol), true, null, null, $"docId"))).as("t"))
+      .select(explode(array(Triples.struct(
+        uri(event, lit(NS.CRM + "P7_took_place_at"), col(placeCol), doc)))).as("t"))
 
     base.select(explode(rows).as("t")).unionByName(placeRows).select("t.*")
   }
@@ -127,14 +127,17 @@ object Events {
     val spark = frame.sparkSession
     import spark.implicits._
     val base = frame.withColumn("is_new", $"old_uri".isNull)
-    val rows = array(
-      row($"id", NS.RDF_TYPE, lit(NS.SCHEMA_WARSA + "Person"), true, null, null, $"docId"),
-      row($"id", NS.CRM + "P70i_is_documented_in", $"subj", true, null, null, $"docId"),
-      row($"id", NS.DCT_SOURCE, lit(SOURCE22), true, null, null, $"docId"))
-    val newOnly = array(
-      row($"id", NS.SKOS_PREF_LABEL, $"label", false, null, null, $"docId"),
-      row($"id", NS.FOAF + "firstName", $"fn", false, null, null, $"docId"),
-      row($"id", NS.FOAF + "familyName", $"sn", false, null, null, $"docId"))
+    val (id, doc) = ($"id", $"docId")
+    val rows = array(Seq(
+      uri(id, lit(NS.RDF_TYPE), lit(NS.SCHEMA_WARSA + "Person"), doc),
+      uri(id, lit(NS.CRM + "P70i_is_documented_in"), $"subj", doc),
+      uri(id, lit(NS.DCT_SOURCE), lit(SOURCE22), doc),
+    ).map(Triples.struct): _*)
+    val newOnly = array(Seq(
+      literal(id, lit(NS.SKOS_PREF_LABEL), $"label", docId = doc),
+      literal(id, lit(NS.FOAF + "firstName"), $"fn", docId = doc),
+      literal(id, lit(NS.FOAF + "familyName"), $"sn", docId = doc),
+    ).map(Triples.struct): _*)
 
     val always = base.select(explode(rows).as("t"))
     val minted = base.filter($"is_new" && $"sn".isNotNull)
@@ -143,8 +146,8 @@ object Events {
     // media/occupation links re-hung onto the person entity
     val media = linkedMedia
       .join(base.select($"subj", $"id", $"docId".as("fdocId")), Seq("subj"))
-      .select($"id".as("subj"), $"pred", $"objValue", $"objIsUri", $"objLang",
-        $"objDatatype", $"fdocId".as("docId"))
+      .select(Triples.columns($"id", $"pred", $"objValue", $"objIsUri", $"objLang",
+        $"objDatatype", $"fdocId"): _*)
     always.unionByName(minted).select("t.*").unionByName(media)
   }
 
@@ -208,13 +211,14 @@ object Events {
       .join(broadcast(ranksGaz.select($"uri".as("wr"), $"label".as("wrl"))), Seq("wr"))
       .withColumn("wrno", lower(regexp_extract($"wr", ".*/(.+?)$", 1)))
       .withColumn("event", concat(lit(EVENTS_NS), $"wrno", lit("_"), $"pid"))
-    val rows = array(
-      row($"event", NS.RDF_TYPE, lit(NS.SCHEMA_WARSA + "Promotion"), true, null, null, $"docId"),
-      row($"event", NS.CRM + "P11_had_participant",
-        concat(lit(NS.ACTORS), $"pid"), true, null, null, $"docId"),
-      row($"event", NS.SCHEMA_ACTORS + "hasRank", $"wr", true, null, null, $"docId"),
-      row($"event", NS.DCT_SOURCE, lit(SOURCE22), true, null, null, $"docId"),
-      row($"event", NS.SKOS_PREF_LABEL, $"wrl", false, null, null, $"docId"))
+    val (event, doc) = ($"event", $"docId")
+    val rows = array(Seq(
+      uri(event, lit(NS.RDF_TYPE), lit(NS.SCHEMA_WARSA + "Promotion"), doc),
+      uri(event, lit(NS.CRM + "P11_had_participant"), concat(lit(NS.ACTORS), $"pid"), doc),
+      uri(event, lit(NS.SCHEMA_ACTORS + "hasRank"), $"wr", doc),
+      uri(event, lit(NS.DCT_SOURCE), lit(SOURCE22), doc),
+      literal(event, lit(NS.SKOS_PREF_LABEL), $"wrl", docId = doc),
+    ).map(Triples.struct): _*)
     ranks.select(explode(rows).as("t")).select("t.*")
   }
 
@@ -227,12 +231,13 @@ object Events {
       .join(frame.select($"subj", $"pid", $"label", $"docId"), Seq("subj"))
       .withColumn("uno", regexp_extract($"unit", ".*/(.+?)$", 1))
       .withColumn("event", concat(lit(EVENTS_NS + "joining_"), $"uno", lit("_"), $"pid"))
-    val rows = array(
-      row($"event", NS.RDF_TYPE, lit(NS.SCHEMA_WARSA + "PersonJoining"), true, null, null, $"docId"),
-      row($"event", NS.CRM + "P143_joined",
-        concat(lit(NS.ACTORS), $"pid"), true, null, null, $"docId"),
-      row($"event", NS.CRM + "P144_joined_with", $"unit", true, null, null, $"docId"),
-      row($"event", NS.DCT_SOURCE, lit(SOURCE22), true, null, null, $"docId"))
+    val (event, doc) = ($"event", $"docId")
+    val rows = array(Seq(
+      uri(event, lit(NS.RDF_TYPE), lit(NS.SCHEMA_WARSA + "PersonJoining"), doc),
+      uri(event, lit(NS.CRM + "P143_joined"), concat(lit(NS.ACTORS), $"pid"), doc),
+      uri(event, lit(NS.CRM + "P144_joined_with"), $"unit", doc),
+      uri(event, lit(NS.DCT_SOURCE), lit(SOURCE22), doc),
+    ).map(Triples.struct): _*)
     units.select(explode(rows).as("t")).select("t.*")
   }
 
@@ -335,10 +340,7 @@ object Events {
       .unionByName(infoResolved).unionByName(noCaptureWwc)
       .distinct()
       .join(persons, Seq("subj"))
-      .select($"subj", lit(NS.SCHEMA_WARSA + "events/related_period").as("pred"),
-        $"war".as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), $"docId")
+      .select(uri($"subj", lit(NS.SCHEMA_WARSA + "events/related_period"), $"war", $"docId"): _*)
   }
 
   /** construct_documents_links.sparql: records with NO person link get a
@@ -353,10 +355,7 @@ object Events {
     val spark = frame.sparkSession
     import spark.implicits._
     frame.filter($"old_uri".isNull)
-      .select($"subj", lit(NS.CRM + "P70_documents").as("pred"),
-        $"minted_person".as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), $"docId")
+      .select(uri($"subj", lit(NS.CRM + "P70_documents"), $"minted_person", $"docId"): _*)
   }
 
   /** E21 backlink inversion: `?p crm:P70_documents ?o` →
@@ -369,14 +368,12 @@ object Events {
     val spark = triples.sparkSession
     import spark.implicits._
     val produced = triples.filter($"pred" === (NS.CRM + "P70_documents"))
-      .select($"objValue".as("subj"),
-        lit(NS.CRM + "P70i_is_documented_in").as("pred"),
-        $"subj".as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), $"docId")
+      .select(uri($"objValue", lit(NS.CRM + "P70i_is_documented_in"), $"subj", $"docId"): _*)
     val existing = triples.filter($"pred" === (NS.CRM + "P70i_is_documented_in"))
       .select($"subj", $"objValue")
+    // the using-join would move its keys to the front: keep the triple order
     produced.join(existing, Seq("subj", "objValue"), "left_anti")
+      .select(produced.columns.map(col): _*)
   }
 
   /** E22 camp coordinate split: `"lat, long"` → wgs84 lat/long literals
@@ -390,13 +387,7 @@ object Events {
         regexp_extract($"coordinates", "(\\d+\\.\\d+),", 1).as("lat"),
         regexp_extract($"coordinates", ",\\s*(\\d+\\.\\d+)", 1).as("long"))
       .filter($"lat" =!= "" && $"long" =!= "")
-    parsed.select($"uri".as("subj"), lit(wgs + "lat").as("pred"),
-        $"lat".as("objValue"), lit(false).as("objIsUri"),
-        lit(null).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), lit("").as("docId"))
-      .unionByName(parsed.select($"uri".as("subj"), lit(wgs + "long").as("pred"),
-        $"long".as("objValue"), lit(false).as("objIsUri"),
-        lit(null).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), lit("").as("docId")))
+    parsed.select(literal($"uri", lit(wgs + "lat"), $"lat"): _*)
+      .unionByName(parsed.select(literal($"uri", lit(wgs + "long"), $"long"): _*))
   }
 }

@@ -1,10 +1,10 @@
 package graft.extract
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.link.Normalize
-import graft.model.NS
+import graft.model.{NS, Triples}
 
 /** E19/E20 + J16 — subject re-minting and graph closure utilities.
   */
@@ -40,9 +40,9 @@ object CampConversion {
           .as("new_subj"))
 
     triples.join(broadcast(mapping), Seq("subj"), "left")
-      .select(coalesce($"new_subj", $"subj").as("subj"),
-        $"pred", $"objValue", $"objIsUri", $"objLang", $"objDatatype", $"docId")
-      .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+      .select(Triples.columns(coalesce($"new_subj", $"subj"), $"pred", $"objValue",
+        $"objIsUri", $"objLang", $"objDatatype", $"docId"): _*)
+      .transform(Triples.distinct)
   }
 
   /** The camp CONSTRUCT (sparql/construct_camps.sparql, run
@@ -85,18 +85,16 @@ object CampConversion {
     val hospOwn = triples.join(broadcast(hospSubj), Seq("subj"), "left_semi")
       .filter($"pred" =!= (NS.SCHEMA_POW + "poistettava-tyosarake"))
 
-    def labelRow(df: DataFrame) = df.select($"subj",
-      lit(NS.SKOS_PREF_LABEL).as("pred"), $"label".as("objValue"),
-      lit(false).as("objIsUri"), lit("fi").as("objLang"),
-      lit(null).cast("string").as("objDatatype"), lit("").as("docId"))
+    val fiLabel = Triples.literal($"subj", lit(NS.SKOS_PREF_LABEL), $"label", lit("fi"))
 
     // one label per captivity_location VALUE (per-solution BIND)
-    val campLabels = labelRow(campLoc.filter(!$"objIsUri")
+    val campLabels = campLoc.filter(!$"objIsUri")
       .join(broadcast(campSubj), Seq("subj"), "left_semi")
-      .select($"subj", $"objValue".as("label")).distinct())
+      .select($"subj", $"objValue".as("label")).distinct()
+      .select(fiLabel: _*)
 
     // one label per OPTIONAL (type, camp_id) combination
-    val hospLabels = labelRow(hospSubj
+    val hospLabels = hospSubj
       .join(triples.filter($"pred" === (NS.SCHEMA_POW + "hospital_type"))
         .select($"subj", $"objValue".as("htype")), Seq("subj"), "left")
       .join(triples.filter($"pred" === (NS.SCHEMA_POW + "camp_id"))
@@ -104,7 +102,8 @@ object CampConversion {
       .select($"subj", concat(
         coalesce($"htype", lit("")),
         when($"htype".isNotNull, lit(" ")).otherwise(lit("")),
-        coalesce($"cid", lit(""))).as("label")).distinct())
+        coalesce($"cid", lit(""))).as("label")).distinct()
+      .select(fiLabel: _*)
 
     // REPLACE semantics: no filter — a coord literal that misses the
     // regex passes through unchanged, exactly like the reference
@@ -113,15 +112,12 @@ object CampConversion {
       .select($"subj",
         regexp_replace($"objValue", "(\\d\\d\\.\\d+),.*", "$1").as("lat"),
         regexp_replace($"objValue", ".*,\\W*(\\d\\d\\.\\d+)$", "$1").as("long"))
-    def coordRow(pred: String, c: Column) = coords.select($"subj",
-      lit(wgs + pred).as("pred"), c.as("objValue"), lit(false).as("objIsUri"),
-      lit(null).cast("string").as("objLang"),
-      lit(null).cast("string").as("objDatatype"), lit("").as("docId"))
 
     campOwn.unionByName(hospOwn)
       .unionByName(campLabels).unionByName(hospLabels)
-      .unionByName(coordRow("lat", $"lat")).unionByName(coordRow("long", $"long"))
-      .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+      .unionByName(coords.select(Triples.literal($"subj", lit(wgs + "lat"), $"lat"): _*))
+      .unionByName(coords.select(Triples.literal($"subj", lit(wgs + "long"), $"long"): _*))
+      .transform(Triples.distinct)
   }
 
   /** J16: all triples related to a set of persons — the person's own
@@ -146,7 +142,6 @@ object CampConversion {
       .select($"subj").distinct()
     val reifTriples = triples.join(reifs, Seq("subj"), "left_semi")
 
-    own.unionByName(hop).unionByName(reifTriples)
-      .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+    own.unionByName(hop).unionByName(reifTriples).transform(Triples.distinct)
   }
 }

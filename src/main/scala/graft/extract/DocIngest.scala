@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.model.NS
-
 /** Builds the canonical document table
   * `(doc_id: string, spans: array<struct<kind,text,media_ref,offset>>)`
   * from the reference's prisoners CSV shape.
@@ -121,6 +119,4 @@ object DocIngest {
   def prisonersDocs(spark: SparkSession,
                     path: String = "/root/reference/test_data/prisoners.csv"): DataFrame =
     toDocTable(readPrisonersCsv(spark, path))
-
-  def dataUri(docLocal: String): String = NS.DATA + docLocal
 }

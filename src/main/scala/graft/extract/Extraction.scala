@@ -21,11 +21,10 @@ object Extraction {
 
   /** Data triples (no schema graph), deduplicated with set semantics.
     *
-    * Doc-level typed path: one closure call per DOCUMENT (not per span),
-    * emitting flat [[RdfTriple]] rows directly — no nested-struct encoder,
-    * no intermediate explode operators; measured 2.4× faster than the
-    * span-UDF + double-explode formulation. Same scalar core
-    * ([[SpanProcessor]]), so golden parity is shared with the UDF path.
+    * Doc-level typed path: one closure call per DOCUMENT (not per span);
+    * [[SpanProcessor]] emits the flat [[RdfTriple]] rows, doc id included,
+    * so there is no nested-struct encoder, no explode operator and no
+    * per-triple copy.
     *
     * Set semantics WITHOUT a shuffle: every triple the extraction emits has
     * a doc-scoped subject (all minted URIs embed the doc id; the ingest
@@ -38,12 +37,9 @@ object Extraction {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.as[Doc].flatMap { doc =>
-      val seen = new java.util.HashSet[TripleOut]()
+      val seen = new java.util.HashSet[RdfTriple]()
       spanResults(doc, originalName(doc)).flatMap { case (_, res) =>
-        res.triples.iterator
-          .filter(seen.add) // per-doc set semantics, no shuffle needed
-          .map(t => RdfTriple(t.subj, t.pred, t.objValue,
-            t.objIsUri, t.objLang, t.objDatatype, doc.doc_id))
+        res.triples.iterator.filter(seen.add) // per-doc set semantics, no shuffle needed
       }
     }
   }

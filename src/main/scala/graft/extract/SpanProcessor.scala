@@ -1,25 +1,17 @@
 package graft.extract
 
 import graft.functions._
-import graft.model.NS
+import graft.model.{NS, RdfTriple}
 
-/** Flat triple emitted per span, before global assembly. */
-final case class TripleOut(
-    subj: String, pred: String, objValue: String,
-    objIsUri: Boolean, objLang: String, objDatatype: String)
+final case class SpanResult(triples: Seq[RdfTriple], errors: Seq[String])
 
-final case class SpanResult(triples: Seq[TripleOut], errors: Seq[String])
-
-/** The scalar-heavy per-span core: parse → convert → validate → triples.
+/** The scalar per-span core: parse → convert → validate → triples.
   *
   * This is the reference's `map_row_to_rdf` inner loop body
   * (reference: src/csv_to_rdf.py:219-281) re-expressed as a pure
-  * deterministic function over one span. It is the only Scala-UDF surface
-  * of the extraction stage (SURVEY.md §2.11) — everything around it
-  * (splitting, fan-out, dedup, union, partitioning) is Catalyst-native
-  * Column expressions, so whole-stage codegen applies to the rest of the
-  * plan and this function is invoked exactly once per span with no
-  * intermediate shuffles.
+  * deterministic function over one span. [[Extraction]] calls it from its
+  * one typed per-document pass; every triple carries the id of the
+  * document the span came from.
   */
 object SpanProcessor {
 
@@ -27,12 +19,13 @@ object SpanProcessor {
 
   /** The per-doc `rdf:type` gate (csv_to_rdf.py:283-284): any span that
     * emits at least one triple also emits the doc's type triple — dozens
-    * of copies per doc, but they collapse in the pipeline's single global
-    * set-dedup, which removes a whole extra pass over the UDF subtree
-    * that a distinct-doc-ids approach would need. */
-  private def withTypeTriple(subj: String, ts: Vector[TripleOut]): Vector[TripleOut] =
+    * of copies per doc, which the per-document set dedup of
+    * [[Extraction.triples]] collapses, so no separate pass over distinct
+    * doc ids is needed. */
+  private def withTypeTriple(subj: String, docLocal: String,
+                             ts: Vector[RdfTriple]): Vector[RdfTriple] =
     if (ts.isEmpty) ts
-    else ts :+ TripleOut(subj, NS.RDF_TYPE, instanceClass, true, null, null)
+    else ts :+ RdfTriple.uri(subj, NS.RDF_TYPE, instanceClass, docLocal)
 
   /** Process the dedicated name span (reference: src/csv_to_rdf.py:180-196). */
   def processName(docLocal: String, text: String): SpanResult = {
@@ -41,16 +34,16 @@ object SpanProcessor {
     val reassembled = if (name.given.nonEmpty) name.family + " " + name.given else name.family
     val errors = Validators.validatePersonName(reassembled, text).toSeq
     val originalName = PyStr.strip(text)
-    var ts = Vector.empty[TripleOut]
+    var ts = Vector.empty[RdfTriple]
     if (name.given.nonEmpty)
-      ts :+= TripleOut(subj, NS.SCHEMA_WARSA + "given_names", name.given, false, null, null)
+      ts :+= RdfTriple.lit(subj, NS.SCHEMA_WARSA + "given_names", name.given, docLocal)
     if (name.family.nonEmpty)
-      ts :+= TripleOut(subj, NS.SCHEMA_WARSA + "family_name", name.family, false, null, null)
+      ts :+= RdfTriple.lit(subj, NS.SCHEMA_WARSA + "family_name", name.family, docLocal)
     if (name.full.nonEmpty)
-      ts :+= TripleOut(subj, NS.SKOS_PREF_LABEL, name.full, false, null, null)
+      ts :+= RdfTriple.lit(subj, NS.SKOS_PREF_LABEL, name.full, docLocal)
     if (originalName.nonEmpty)
-      ts :+= TripleOut(subj, NS.SCHEMA_POW + "original_name", originalName, false, null, null)
-    SpanResult(withTypeTriple(subj, ts), errors)
+      ts :+= RdfTriple.lit(subj, NS.SCHEMA_POW + "original_name", originalName, docLocal)
+    SpanResult(withTypeTriple(subj, docLocal, ts), errors)
   }
 
   /** Process one mapped value span (reference: src/csv_to_rdf.py:219-281). */
@@ -118,25 +111,26 @@ object SpanProcessor {
     // ---- emit ------------------------------------------------------------
     if (objValue == null || objValue.isEmpty) return SpanResult(Nil, errors)
 
-    var ts = Vector.empty[TripleOut]
-    var rdfValue = TripleOut(subj, spec.uri, objValue, objIsUri, null, objDatatype)
+    var ts = Vector.empty[RdfTriple]
+    var rdfValue = RdfTriple(subj, spec.uri, objValue, objIsUri, null, objDatatype, docLocal)
 
     if (spec.createResource.nonEmpty) {
       // child resource (E15/E16; reference csv_to_rdf.py:143-163,256-268)
       val resUri = NS.DATA + s"${docLocal}_${spec.predLocal}_${offset * 10}"
-      ts :+= TripleOut(resUri, NS.RDF_TYPE, spec.createResource, true, null, null)
-      ts :+= TripleOut(resUri, spec.captureValueProp, objValue, objIsUri, null, objDatatype)
-      ts :+= TripleOut(resUri, NS.SKOS_PREF_LABEL,
-        spec.labelFi.replace("{person}", originalName), false, "fi", null)
-      ts :+= TripleOut(resUri, NS.SKOS_PREF_LABEL,
-        spec.labelEn.replace("{person}", originalName), false, "en", null)
+      ts :+= RdfTriple.uri(resUri, NS.RDF_TYPE, spec.createResource, docLocal)
+      ts :+= rdfValue.copy(subj = resUri, pred = spec.captureValueProp)
+      ts :+= RdfTriple.langLit(resUri, NS.SKOS_PREF_LABEL,
+        spec.labelFi.replace("{person}", originalName), "fi", docLocal)
+      ts :+= RdfTriple.langLit(resUri, NS.SKOS_PREF_LABEL,
+        spec.labelEn.replace("{person}", originalName), "en", docLocal)
       if (spec.captureOrder)
-        ts :+= TripleOut(resUri, NS.SCHEMA_POW + "order", (offset * 10).toString, false, null, NS.XSD_INTEGER)
+        ts :+= RdfTriple.typed(resUri, NS.SCHEMA_POW + "order", (offset * 10).toString,
+          NS.XSD_INTEGER, docLocal)
       if (spec.captureDates && (dateBegin != null || dateEnd != null)) {
-        ts :+= dateTriple(resUri, NS.SCHEMA_POW + "date_begin", dateBegin)
-        ts :+= dateTriple(resUri, NS.SCHEMA_POW + "date_end", dateEnd)
+        ts :+= dateTriple(resUri, NS.SCHEMA_POW + "date_begin", dateBegin, docLocal)
+        ts :+= dateTriple(resUri, NS.SCHEMA_POW + "date_end", dateEnd, docLocal)
       }
-      rdfValue = TripleOut(subj, spec.uri, resUri, true, null, null)
+      rdfValue = RdfTriple.uri(subj, spec.uri, resUri, docLocal)
     }
 
     ts :+= rdfValue
@@ -144,19 +138,20 @@ object SpanProcessor {
     // reification (E17; reference csv_to_rdf.py:272-281)
     if (source != null && source.nonEmpty) {
       val reifUri = NS.DATA + s"${docLocal}_${spec.predLocal}_${offset}_reification_source"
-      ts :+= TripleOut(reifUri, NS.RDF_SUBJECT, subj, true, null, null)
-      ts :+= TripleOut(reifUri, NS.RDF_PREDICATE, spec.uri, true, null, null)
-      ts :+= TripleOut(reifUri, NS.RDF_OBJECT, rdfValue.objValue, rdfValue.objIsUri, null, rdfValue.objDatatype)
-      ts :+= TripleOut(reifUri, NS.RDF_TYPE, NS.RDF_STATEMENT, true, null, null)
-      ts :+= TripleOut(reifUri, NS.DCT_SOURCE, source, false, null, null)
+      ts :+= RdfTriple.uri(reifUri, NS.RDF_SUBJECT, subj, docLocal)
+      ts :+= RdfTriple.uri(reifUri, NS.RDF_PREDICATE, spec.uri, docLocal)
+      ts :+= rdfValue.copy(subj = reifUri, pred = NS.RDF_OBJECT)
+      ts :+= RdfTriple.uri(reifUri, NS.RDF_TYPE, NS.RDF_STATEMENT, docLocal)
+      ts :+= RdfTriple.lit(reifUri, NS.DCT_SOURCE, source, docLocal)
     }
 
-    SpanResult(withTypeTriple(subj, ts), errors)
+    SpanResult(withTypeTriple(subj, docLocal, ts), errors)
   }
 
-  private def dateTriple(subj: String, pred: String, d: DateOrString): TripleOut =
-    if (d != null && d.isDate) TripleOut(subj, pred, d.lexical, false, null, NS.XSD_DATE)
-    else TripleOut(subj, pred, if (d == null) "None" else d.raw, false, null, null)
+  private def dateTriple(subj: String, pred: String, d: DateOrString,
+                         docLocal: String): RdfTriple =
+    if (d != null && d.isDate) RdfTriple.typed(subj, pred, d.lexical, NS.XSD_DATE, docLocal)
+    else RdfTriple.lit(subj, pred, if (d == null) "None" else d.raw, docLocal)
 
   private def validatorFor(id: String, d: DateOrString): Option[String] = id match {
     case "dates_war"    => Validators.validateDates(d)
@@ -166,6 +161,4 @@ object SpanProcessor {
     case "dates_death"  => Validators.validateDates(d, before = java.time.LocalDate.now())
     case _ => None
   }
-
-  def instanceClassUri: String = instanceClass
 }

@@ -3,7 +3,7 @@ package graft.gazetteer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.NS
+import graft.model.{NS, RdfTriple}
 
 /** Synthetic, deterministic gazetteers — the broadcast dimension side of
   * every linking task.
@@ -161,20 +161,18 @@ object Gazetteers {
     * CONSTRUCT (process.sh:20-23). */
   def rawCampTriples(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val rows = rawCampRows.flatMap { case (idx, id, loc, coord, hospital) =>
+    rawCampRows.flatMap { case (idx, id, loc, coord, hospital) =>
       val subj = s"${NS.DATA}r_$idx"
       val cls = NS.SCHEMA_WARSA + (if (hospital) "PowHospital" else "PowCamp")
       Seq(
-        (subj, NS.RDF_TYPE, cls, true),
-        (subj, NS.SCHEMA_POW + "captivity_location", loc, false),
-        (subj, NS.SCHEMA_POW + "coordinates", coord, false)) ++
-        (if (id.nonEmpty) Seq((subj, NS.SCHEMA_POW + "camp_id", id, false)) else Nil) ++
+        RdfTriple.uri(subj, NS.RDF_TYPE, cls),
+        RdfTriple.lit(subj, NS.SCHEMA_POW + "captivity_location", loc),
+        RdfTriple.lit(subj, NS.SCHEMA_POW + "coordinates", coord)) ++
+        (if (id.nonEmpty) Seq(RdfTriple.lit(subj, NS.SCHEMA_POW + "camp_id", id)) else Nil) ++
         (if (hospital)
-          Seq((subj, NS.SCHEMA_POW + "hospital_type", "sotavankisairaala", false))
+          Seq(RdfTriple.lit(subj, NS.SCHEMA_POW + "hospital_type", "sotavankisairaala"))
         else Nil)
-    }
-    rows.map { case (s, p, o, u) => (s, p, o, u, null: String, null: String, "") }
-      .toDF("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype", "docId")
+    }.toDF()
   }
 
   /** WarSampo-casualties family-name counts — the role of the SPARQL
@@ -199,9 +197,8 @@ object Gazetteers {
     * synthetic id space). */
   def additionalLinks(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Seq((NS.DATA + "prisoner_4", NS.SCHEMA_POW + "unit",
-      NS.ACTORS + "actor_3", true, null: String, null: String, "prisoner_4"))
-      .toDF("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype", "docId")
+    Seq(RdfTriple.uri(NS.DATA + "prisoner_4", NS.SCHEMA_POW + "unit",
+      NS.ACTORS + "actor_3", docId = "prisoner_4")).toDF()
   }
 
   /** Person-document PDF path listing — the filesystem glob the reference

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Converters
-import graft.model.{NS, RdfTriple}
+import graft.model.{NS, Triples}
 
 /** Label normalization shared by all gazetteer joins (the role ARPA's
   * lemmatize/fold plays in the reference). */
@@ -51,12 +51,6 @@ object Linkers {
     triples.filter(col("pred") === pred && !col("objIsUri"))
       .select(col("subj"), col("objValue").as("literal"), col("docId"))
 
-  private def linkTriples(df: DataFrame, target: Column): DataFrame =
-    df.select(col("subj"), target.as("pred"),
-      col("uri").as("objValue"), lit(true).as("objIsUri"),
-      lit(null).cast("string").as("objLang"),
-      lit(null).cast("string").as("objDatatype"), col("docId"))
-
   /** One exact-dictionary linking task: literals of `source` are keyed by
     * `key` and looked up in `dict` (uri, k); hits become `target` links. */
   final case class DictTask(source: String, target: String, key: Column => Column,
@@ -82,7 +76,7 @@ object Linkers {
       .withColumn("k", key)
       .join(broadcast(dict), Seq("pred", "k"))
       .groupBy("subj", "target", "literal", "docId").agg(min("uri").as("uri"))
-    linkTriples(hit, col("target"))
+    hit.select(Triples.uri(col("subj"), col("target"), col("uri"), col("docId")): _*)
   }
 
   /** J2: camps — alias remap (linker.py:79-83) then exact match on
@@ -167,7 +161,7 @@ object Linkers {
     val w = Window.partitionBy("subj", "literal").orderBy(col("score").desc, col("uri"))
     val hit = cand.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("subj"), col("literal"), col("docId"), col("uri"))
-    linkTriples(hit, lit(targetProp))
+    hit.select(Triples.uri(col("subj"), lit(targetProp), col("uri"), col("docId")): _*)
   }
 
   /** J6: occupations — fuzzy Jaro-Winkler join at threshold 0.84
@@ -249,7 +243,7 @@ object Linkers {
       .orderBy($"period_match".desc, $"gram_len".desc, $"uri")
     val hit = scored.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
       .select($"subj", $"literal", $"docId", $"uri")
-    linkTriples(hit, lit(NS.SCHEMA_POW + "unit"))
+    hit.select(Triples.uri($"subj", lit(NS.SCHEMA_POW + "unit"), $"uri", $"docId"): _*)
   }
 
   /** E23: the war-period rule — capture date < 1941-06-24 ⇒ WinterWar,
@@ -293,10 +287,8 @@ object Linkers {
 
     // a textual reference may hit several issues (multimap) — natural fanout
     val hits = refs.join(broadcast(idx), "k")
-    val links = hits.select($"subj", lit(NS.SCHEMA_WARSA + "sotilaan_aani_magazine").as("pred"),
-      $"uri".as("objValue"), lit(true).as("objIsUri"),
-      lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-      $"docId")
+    val links = hits.select(
+      Triples.uri($"subj", lit(NS.SCHEMA_WARSA + "sotilaan_aani_magazine"), $"uri", $"docId"): _*)
 
     val docs = idx.select($"uri", $"hakemisto", $"tiedostonimi").distinct()
       .select($"uri",
@@ -328,9 +320,8 @@ object Linkers {
       concat(lit("https://static.sotasampo.fi/person_documents/"), $"dir", lit("/"),
         $"pid", $"suffix").as("contentUrl"),
       concat(lit("prisoner_"), $"pid").as("docId"))
-    val links = rows.select($"subj", lit(NS.SCHEMA_WARSA + "person_document").as("pred"),
-      $"uri".as("objValue"), lit(true).as("objIsUri"),
-      lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"), $"docId")
+    val links = rows.select(
+      Triples.uri($"subj", lit(NS.SCHEMA_WARSA + "person_document"), $"uri", $"docId"): _*)
     (links, mediaDocTriples(rows.select($"uri", $"label", $"contentUrl").distinct(),
       NS.SCHEMA_WARSA + "PersonDocument"))
   }
@@ -350,18 +341,12 @@ object Linkers {
           Normalize.slugifyCol($"video_file")).as("uri"),
         concat(lit("https://static.sotasampo.fi/videos/prisoners/"), $"video_file").as("contentUrl"))
 
+    val video = lit(NS.SCHEMA_WARSA + "documented_in_video")
     val prisonerLinks = exploded.filter($"nro".isNotNull)
-      .select(concat(lit(NS.DATA), lit("prisoner_"), $"nro").as("subj"),
-        lit(NS.SCHEMA_WARSA + "documented_in_video").as("pred"),
-        $"uri".as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        concat(lit("prisoner_"), $"nro").as("docId"))
+      .select(Triples.uri(concat(lit(NS.DATA), lit("prisoner_"), $"nro"), video, $"uri",
+        concat(lit("prisoner_"), $"nro")): _*)
     val warsaLinks = exploded.filter($"warsa_uri".isNotNull)
-      .select($"warsa_uri".as("subj"),
-        lit(NS.SCHEMA_WARSA + "documented_in_video").as("pred"),
-        $"uri".as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId"))
+      .select(Triples.uri($"warsa_uri", video, $"uri"): _*)
 
     val docs = mediaDocTriples(
       exploded.select($"uri", coalesce($"label", lit("Video")).as("label"),
@@ -392,9 +377,7 @@ object Linkers {
     val joined = refs.join(reg, Seq("slug"), "left")
       .withColumn("uri", concat(lit(NS.DATA), lit("source_"), $"slug"))
 
-    val rewritten = joined.select($"subj", lit(NS.DCT_SOURCE).as("pred"),
-      $"uri".as("objValue"), lit(true).as("objIsUri"),
-      lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"), $"docId")
+    val rewritten = joined.select(Triples.uri($"subj", lit(NS.DCT_SOURCE), $"uri", $"docId"): _*)
 
     // register-defined sources: prefLabel = description else label
     // (linker.py:476-484); minted-from-reference sources: prefLabel = the
@@ -409,19 +392,11 @@ object Linkers {
         coalesce($"description", $"label", $"literal").as("plabel"),
         $"location")
     val entityTriples =
-      entities.select($"uri".as("subj"), lit(NS.RDF_TYPE).as("pred"),
-        lit(NS.SCHEMA_WARSA + "Source").as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId"))
-      .unionByName(entities.select($"uri".as("subj"), lit(NS.SKOS_PREF_LABEL).as("pred"),
-        $"plabel".as("objValue"), lit(false).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId")))
-      .unionByName(entities.filter($"location".isNotNull)
-        .select($"uri".as("subj"), lit(NS.SCHEMA_POW + "location").as("pred"),
-          $"location".as("objValue"), lit(false).as("objIsUri"),
-          lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-          lit("").as("docId")))
+      entities.select(Triples.uri($"uri", lit(NS.RDF_TYPE), lit(NS.SCHEMA_WARSA + "Source")): _*)
+        .unionByName(entities.select(
+          Triples.literal($"uri", lit(NS.SKOS_PREF_LABEL), $"plabel"): _*))
+        .unionByName(entities.filter($"location".isNotNull)
+          .select(Triples.literal($"uri", lit(NS.SCHEMA_POW + "location"), $"location"): _*))
 
     val removed = triples.filter($"pred" === NS.DCT_SOURCE && !$"objIsUri")
     (rewritten.unionByName(entityTriples), removed.toDF())
@@ -433,17 +408,9 @@ object Linkers {
                               cls: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select($"uri".as("subj"), lit(NS.RDF_TYPE).as("pred"),
-        lit(cls).as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId"))
-      .unionByName(docs.select($"uri".as("subj"), lit(NS.SKOS_PREF_LABEL).as("pred"),
-        $"label".as("objValue"), lit(false).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId")))
-      .unionByName(docs.select($"uri".as("subj"), lit(NS.SCHEMA_ORG + "contentUrl").as("pred"),
-        $"contentUrl".as("objValue"), lit(true).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId")))
+    docs.select(Triples.uri($"uri", lit(NS.RDF_TYPE), lit(cls)): _*)
+      .unionByName(docs.select(Triples.literal($"uri", lit(NS.SKOS_PREF_LABEL), $"label"): _*))
+      .unionByName(docs.select(
+        Triples.uri($"uri", lit(NS.SCHEMA_ORG + "contentUrl"), $"contentUrl"): _*))
   }
 }

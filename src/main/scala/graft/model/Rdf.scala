@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit, struct => structOf}
+
 /** RDF namespace constants.
   *
   * Re-expression of the reference's namespace table
@@ -100,6 +103,50 @@ object RdfTriple {
     RdfTriple(subj, pred, obj, objIsUri = false, lang, null, docId)
   def typed(subj: String, pred: String, obj: String, datatype: String, docId: String = ""): RdfTriple =
     RdfTriple(subj, pred, obj, objIsUri = false, null, datatype, docId)
+}
+
+/** The [[RdfTriple]] row format as Spark columns — the one place a stage
+  * spells the triple schema. Every producer builds its rows from
+  * [[columns]] (or the [[uri]] / [[literal]] shorthands), a `select` for
+  * one row per input row or a [[struct]] array for an `explode`; every
+  * set-semantics dedup goes through [[distinct]].
+  *
+  * The defaults are the format's: no language tag and no datatype are
+  * NULL, and a global (not document-derived) triple has `docId` "". */
+object Triples {
+
+  /** The columns that make two rows the same triple: all but the `docId`
+    * lineage. */
+  val identity: Seq[String] = Seq("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+
+  private def none: Column = lit(null).cast("string")
+
+  /** The seven triple columns in [[RdfTriple]] order. A column that
+    * already is the reference of its name passes through unaliased, so a
+    * pass-through select plans like a hand-written one. */
+  def columns(subj: Column, pred: Column, objValue: Column, objIsUri: Column,
+              objLang: Column = none, objDatatype: Column = none,
+              docId: Column = lit("")): Seq[Column] =
+    Seq("subj" -> subj, "pred" -> pred, "objValue" -> objValue, "objIsUri" -> objIsUri,
+      "objLang" -> objLang, "objDatatype" -> objDatatype, "docId" -> docId).map {
+      case (name, c) => if (c == col(name)) c else c.as(name)
+    }
+
+  /** A triple whose object is a URI. */
+  def uri(subj: Column, pred: Column, obj: Column, docId: Column = lit("")): Seq[Column] =
+    columns(subj, pred, obj, lit(true), docId = docId)
+
+  /** A triple whose object is a literal, optionally tagged or typed. */
+  def literal(subj: Column, pred: Column, obj: Column, lang: Column = none,
+              datatype: Column = none, docId: Column = lit("")): Seq[Column] =
+    columns(subj, pred, obj, lit(false), lang, datatype, docId)
+
+  /** One triple as a struct of the same columns: the element of an
+    * `explode(array(...))` that emits several triples per input row. */
+  def struct(triple: Seq[Column]): Column = structOf(triple: _*)
+
+  /** Set semantics: one row per [[identity]], whatever its `docId`. */
+  def distinct(df: DataFrame): DataFrame = df.dropDuplicates(identity)
 }
 
 /** A validation/conversion error row — the reference's errors.csv side

@@ -12,35 +12,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: the naive formulation is a range-condition join, which
   * Spark executes as an equi-join on the key with a post-match filter +
   * per-key top-1 — quadratic comparisons on hot keys (the same defect
-  * class the dedup candidate join had before round 3). This
-  * implementation is the union + single-window pass: tag both sides,
-  * union on (key, ts), and let `last(payload, ignoreNulls)` over an
-  * ordered running frame carry each right payload forward to the left
-  * rows that follow it. ONE shuffle on the key, a per-key sort, no
-  * comparison blow-up.
-  *
-  * Semantics:
-  *  - inclusive: a right row at exactly `leftTs` matches (right rows sort
-  *    BEFORE left rows at equal timestamps);
-  *  - all payload columns are carried as ONE struct, so they always come
-  *    from the SAME right row even when some payload values are null;
-  *  - right should be unique per (key, ts) — dedupe upstream; otherwise
-  *    an arbitrary co-timestamped right row wins;
-  *  - left rows with no right row at or before them emit null payloads
-  *    (left-outer semantics; filter afterwards for inner);
-  *  - column-name contract: left and right column names must be disjoint
-  *    apart from `keys` (right's non-key non-payload columns are ignored);
-  *    a null `leftTs` row sorts before every right row and gets null
-  *    payloads.
+  * class the dedup candidate join had before round 3). [[asOfBucketed]]
+  * instead unions both sides on (key, ts) and lets `last(payload,
+  * ignoreNulls)` over an ordered running frame carry each right payload
+  * forward to the left rows that follow it: no comparison blow-up.
   */
 object AsOfJoin {
 
-  /** HOT-KEY CONTRACT: this form partitions its one window by `keys`
-    * alone, so a single key holding a large fraction of the table
-    * serializes that key's sort into one task. Correct at any size, fine
-    * when keys are well-distributed; for skewed keys at scale use
-    * [[asOfBucketed]], which bounds every task by (key, time-bucket) and
-    * is output-identical (equivalence spec in OpsSpec). */
   /** Debug guard for the right-uniqueness contract: fails fast when any
     * (key, ts) holds more than one right row (where the operators would
     * otherwise silently pick an arbitrary winner). One aggregate pass —
@@ -54,48 +32,26 @@ object AsOfJoin {
       s"as-of right side not unique per (${keys.mkString(",")}, $rightTs): e.g. ${dup.mkString}")
   }
 
-  def asOf(left: DataFrame, right: DataFrame, keys: Seq[String],
-           leftTs: String, rightTs: String, payloads: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-
-    val l = left
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__side", lit(1))
-      .withColumn("__pay", lit(null).cast(
-        org.apache.spark.sql.types.StructType(payloads.map(right.schema(_)))))
-
-    // a null right timestamp matches NOTHING (it would otherwise sort
-    // nulls-first and poison the whole key partition via last(ignoreNulls))
-    var r = right
-      .filter(col(rightTs).isNotNull)
-      .withColumn("__ts", col(rightTs))
-      .withColumn("__side", lit(0))
-      .withColumn("__pay", struct(payloads.map(col): _*))
-      .select((keys :+ "__ts" :+ "__side" :+ "__pay").map(col): _*)
-    leftCols.filterNot(c => keys.contains(c)).foreach { c =>
-      r = r.withColumn(c, lit(null).cast(left.schema(c).dataType))
-    }
-
-    // right rows (side 0) sort before left rows (side 1) at equal ts →
-    // inclusive as-of; the running frame ends at the current row
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ts").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val unioned = l.select((leftCols :+ "__ts" :+ "__side" :+ "__pay").map(col): _*)
-      .unionByName(r.select((leftCols :+ "__ts" :+ "__side" :+ "__pay").map(col): _*))
-
-    unioned
-      .withColumn("__pay", last(col("__pay"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(leftCols.map(col) ++ payloads.map(p => col(s"__pay.$p").as(p)): _*)
-  }
-
-  /** Skew-safe as-of join — output-identical to [[asOf]] (same contract,
-    * same tie rules), but every window partitions by (key, TIME BUCKET)
-    * instead of the key alone, so one hot key (a user holding 10% of a
-    * 100 TB event table) is split across its time range instead of
-    * serializing into a single task. Three-step two-pass shape:
+  /** Skew-safe as-of join. Semantics:
+    *  - inclusive: a right row at exactly `leftTs` matches (right rows sort
+    *    BEFORE left rows at equal timestamps);
+    *  - all payload columns are carried as ONE struct, so they always come
+    *    from the SAME right row even when some payload values are null;
+    *  - right should be unique per (key, ts) — dedupe upstream (see
+    *    [[requireUniqueRight]]); otherwise an arbitrary co-timestamped
+    *    right row wins;
+    *  - left rows with no right row at or before them emit null payloads
+    *    (left-outer semantics; filter afterwards for inner);
+    *  - a right row with a null `rightTs` matches nothing; a null `leftTs`
+    *    row gets null payloads;
+    *  - column-name contract: left and right column names must be disjoint
+    *    apart from `keys` (right's non-key non-payload columns are ignored).
+    *
+    * Every window partitions by (key, TIME BUCKET) instead of the key
+    * alone, so one hot key (a user holding 10% of a 100 TB event table) is
+    * split across its time range instead of serializing into a single
+    * task. The plain one-window-per-key form lives in the test code as
+    * the equivalence reference. Three-step two-pass shape:
     *
     *  1. per (key, bucket): the LAST right row's payload (a window over
     *     right bucketed — bounded by rights per key per bucket);
@@ -104,16 +60,15 @@ object AsOfJoin {
     *     earlier-bucket state forward with one tiny per-key window
     *     (strictly-earlier frame, so in-bucket rights stay in step 3);
     *  3. union left rows + right rows + one carry pseudo-row per (key,
-    *     bucket) (sorts first in its bucket: null ts, side −1), then the
-    *     same running `last(payload)` pass as [[asOf]] — partitioned by
-    *     (key, bucket).
+    *     bucket) (sorts first in its bucket: null ts, side −1), then one
+    *     running `last(payload)` pass partitioned by (key, bucket).
     *
     * The per-task bound becomes rows-per-(key, bucket): pick
     * `bucketSeconds` so a hot key's densest bucket fits a task (e.g.
     * hours for a years-spanning table). A key fully inside ONE bucket
-    * degenerates to [[asOf]]'s bound — the knob, not magic. Null left
+    * degenerates to the per-key bound — the knob, not magic. Null left
     * timestamps ride the null bucket: it sorts first on the spine with an
-    * empty carry frame, so they keep [[asOf]]'s null-payload semantics. */
+    * empty carry frame, so they get null payloads. */
   def asOfBucketed(left: DataFrame, right: DataFrame, keys: Seq[String],
                    leftTs: String, rightTs: String, payloads: Seq[String],
                    bucketSeconds: Long = 86400L): DataFrame = {

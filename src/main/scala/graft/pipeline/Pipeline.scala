@@ -9,7 +9,7 @@ import graft.events.Events
 import graft.extract.{CampConversion, Extraction}
 import graft.gazetteer.Gazetteers
 import graft.link.Linkers
-import graft.model.NS
+import graft.model.{NS, Triples}
 import graft.privacy.Privacy
 
 /** The full KG-construction pipeline: extract → prune → link → er-link →
@@ -129,7 +129,7 @@ object Pipeline {
     // -- 3b. media graph: magazine/person-document/video doc entities -----
     store.stage("media", metrics = Seq("triples" -> count(lit(1)))) {
       magazines._2.unionByName(personDocs._2).unionByName(videos._2)
-        .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+        .transform(Triples.distinct)
     }
 
     // -- 4. person record linkage (J9) ------------------------------------
@@ -147,7 +147,7 @@ object Pipeline {
           Seq("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype", "docId"),
           "left_anti")
         .unionByName(added)
-        .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+        .transform(Triples.distinct)
     }
 
     // -- 6. canonicalization (connected components over person links) -----
@@ -192,7 +192,7 @@ object Pipeline {
           .unionByName(Events.invertDocumentsLinks(canonical))
           .unionByName(Events.campCoordinates(Gazetteers.camps(spark)))
       canonical.unionByName(events)
-        .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+        .transform(Triples.distinct)
     }
 
     // -- 8. final store: triples partitioned by predicate -----------------

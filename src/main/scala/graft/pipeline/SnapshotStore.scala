@@ -73,19 +73,14 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     * stage plan once per metric before the write recomputed it — a 2-3×
     * cost on the most expensive stages at scale.) `rows` and per-file
     * lineage come from the written parquet footers only: metadata reads,
-    * never a second pass over the data. */
+    * never a second pass over the data.
+    *
+    * The manifest's "sec" is the wall time from `t0` (default: the call)
+    * to manifest assembly — the persisted per-stage timing a resumed or
+    * audited run reads back without re-running anything. */
   def write(stage: String, df: DataFrame, partitionCols: Seq[String] = Nil,
             metrics: Seq[(String, Column)] = Nil,
-            sortCols: Seq[String] = Nil): Int =
-    commit(stage, df, partitionCols, metrics, sortCols, System.nanoTime())
-
-  /** [[write]] with the stage clock started at `t0`. The manifest's "sec"
-    * is the wall time from `t0` to manifest assembly — the persisted
-    * per-stage timing a resumed or audited run reads back without
-    * re-running anything. */
-  private def commit(stage: String, df: DataFrame, partitionCols: Seq[String],
-                     metrics: Seq[(String, Column)], sortCols: Seq[String],
-                     t0: Long): Int = {
+            sortCols: Seq[String] = Nil, t0: Long = System.nanoTime()): Int = {
     val v = latestVersion(stage).map(_ + 1).getOrElse(0)
     val dir = versionDir(stage, v)
 
@@ -165,7 +160,7 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     else {
       val t0 = System.nanoTime()
       val df = compute
-      val v = commit(name, df, partitionCols, metrics, sortCols, t0)
+      val v = write(name, df, partitionCols, metrics, sortCols, t0)
       // the schema is the frame's own: no parquet schema-inference job
       spark.read.schema(df.schema).parquet(versionDir(name, v).toString)
     }

@@ -2,11 +2,11 @@ package graft.privacy
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Converters
-import graft.model.NS
+import graft.model.{NS, Triples}
 
 /** Pseudonymization — port of the reference's prune_nonpublic.py:
   * classify each person record as public / died-recently / possibly-alive,
@@ -176,7 +176,7 @@ object Privacy {
     kept.toDF()
       .unionByName(replacements(aliveFamily, captivityOf, common))
       .unionByName(flags(hidden, alive))
-      .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
+      .transform(Triples.distinct)
   }
 
   // replacement label triples (prune_nonpublic.py:118-141)
@@ -184,36 +184,29 @@ object Privacy {
                            common: DataFrame): DataFrame = {
     val spark = aliveFamily.sparkSession
     import spark.implicits._
-    val restricted = "Nimi rajoitettu"
-
-    def mk(df: DataFrame, subjCol: String, pred: String, objCol: Column,
-           lang: String): DataFrame =
-      df.select(col(subjCol).as("subj"), lit(pred).as("pred"),
-        objCol.as("objValue"), lit(false).as("objIsUri"),
-        lit(lang).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), lit("").as("docId"))
+    val restricted = lit("Nimi rajoitettu")
+    val label = lit(NS.SKOS_PREF_LABEL)
 
     val uncommon = aliveFamily.filter(!$"is_common").select($"subj").distinct()
     val commonRecs = aliveFamily.filter($"is_common")
 
     val nameRows =
-      mk(uncommon, "subj", NS.SCHEMA_WARSA + "family_name", lit(restricted), null)
-        .unionByName(mk(uncommon, "subj", NS.SKOS_PREF_LABEL, lit(restricted), null))
-        .unionByName(mk(commonRecs, "subj", NS.SKOS_PREF_LABEL, $"family", null))
+      uncommon.select(Triples.literal($"subj", lit(NS.SCHEMA_WARSA + "family_name"), restricted): _*)
+        .unionByName(uncommon.select(Triples.literal($"subj", label, restricted): _*))
+        .unionByName(commonRecs.select(Triples.literal($"subj", label, $"family"): _*))
 
     val capt = captivityOf
       .join(aliveFamily.select($"subj", $"family", $"is_common"), Seq("subj"), "left")
+    val uncommonCapt = capt.filter(!coalesce($"is_common", lit(false)))
+    val commonCapt = capt.filter(coalesce($"is_common", lit(false)))
     val captRows =
-      mk(capt.filter(!coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL, lit("Henkilön sotavankeus"), null)
-        .unionByName(mk(capt.filter(!coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL, lit("Person's captivity"), null))
-        .unionByName(mk(capt.filter(coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL,
-          concat(lit("Henkilön "), $"family", lit(" sotavankeus")), null))
-        .unionByName(mk(capt.filter(coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL,
-          concat(lit("Person's "), $"family", lit(" captivity")), null))
+      uncommonCapt.select(Triples.literal($"captivity", label, lit("Henkilön sotavankeus")): _*)
+        .unionByName(uncommonCapt.select(
+          Triples.literal($"captivity", label, lit("Person's captivity")): _*))
+        .unionByName(commonCapt.select(Triples.literal($"captivity", label,
+          concat(lit("Henkilön "), $"family", lit(" sotavankeus"))): _*))
+        .unionByName(commonCapt.select(Triples.literal($"captivity", label,
+          concat(lit("Person's "), $"family", lit(" captivity"))): _*))
 
     nameRows.unionByName(captRows).distinct()
   }
@@ -221,13 +214,10 @@ object Privacy {
   // hide_documents / personal_information_removed flags
   // (prune_nonpublic.py:222,144)
   private def flags(hidden: DataFrame, alive: DataFrame): DataFrame = {
-    val spark = hidden.sparkSession
-    import spark.implicits._
-    def flag(df: DataFrame, pred: String): DataFrame =
-      df.select($"subj", lit(pred).as("pred"), lit("true").as("objValue"),
-        lit(false).as("objIsUri"), lit(null).cast("string").as("objLang"),
-        lit(NS.XSD_BOOLEAN).as("objDatatype"), lit("").as("docId"))
-    flag(hidden.select("subj"), NS.SCHEMA_POW + "hide_documents")
-      .unionByName(flag(alive.select("subj"), NS.SCHEMA_POW + "personal_information_removed"))
+    val (subj, yes, boolean) = (col("subj"), lit("true"), lit(NS.XSD_BOOLEAN))
+    hidden.select(Triples.literal(subj, lit(NS.SCHEMA_POW + "hide_documents"), yes,
+        datatype = boolean): _*)
+      .unionByName(alive.select(Triples.literal(subj,
+        lit(NS.SCHEMA_POW + "personal_information_removed"), yes, datatype = boolean): _*))
   }
 }

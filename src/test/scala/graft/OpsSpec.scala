@@ -211,7 +211,7 @@ class OpsSpec extends AnyFunSuite {
       (103L, 1L, ts("2026-01-01 12:00:00")), // after both -> "b"
       (104L, 2L, ts("2026-01-01 10:00:00")), // key with no dim -> null
     ).toDF("event_id", "k", "ets")
-    val got = graft.ops.AsOfJoin.asOf(events, dim, Seq("k"), "ets", "dim_ts", Seq("v"))
+    val got = AsOfReference.asOf(events, dim, Seq("k"), "ets", "dim_ts", Seq("v"))
       .select("event_id", "v").collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got(100L).isEmpty)
@@ -220,7 +220,7 @@ class OpsSpec extends AnyFunSuite {
     assert(got(103L).contains("b"))
     assert(got(104L).isEmpty)
     // deterministic under repartition
-    val again = graft.ops.AsOfJoin.asOf(events.repartition(3), dim.repartition(2),
+    val again = AsOfReference.asOf(events.repartition(3), dim.repartition(2),
         Seq("k"), "ets", "dim_ts", Seq("v"))
       .select("event_id", "v").collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
@@ -229,7 +229,7 @@ class OpsSpec extends AnyFunSuite {
     // a null right timestamp must match nothing (not poison the partition)
     val nullDim = dim.unionByName(Seq((1L, null.asInstanceOf[Timestamp], "poison"))
       .toDF("k", "dim_ts", "v"))
-    val guarded = graft.ops.AsOfJoin.asOf(events, nullDim, Seq("k"), "ets", "dim_ts", Seq("v"))
+    val guarded = AsOfReference.asOf(events, nullDim, Seq("k"), "ets", "dim_ts", Seq("v"))
       .select("event_id", "v").collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(guarded == got, s"null right ts changed results: $guarded")
@@ -265,7 +265,7 @@ class OpsSpec extends AnyFunSuite {
     def run(f: => org.apache.spark.sql.DataFrame) =
       f.select("event_id", "v").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
-    val plain = run(graft.ops.AsOfJoin.asOf(
+    val plain = run(AsOfReference.asOf(
       left, right, Seq("k"), "ets", "rts", Seq("v")))
     for (bucketSec <- Seq(3600L, 86400L, 100L * 86400L)) {
       val bucketed = run(graft.ops.AsOfJoin.asOfBucketed(

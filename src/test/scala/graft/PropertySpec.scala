@@ -180,7 +180,7 @@ class PropertySpec extends AnyFunSuite {
       def run(f: => org.apache.spark.sql.DataFrame) =
         f.select("event_id", "v").collect()
           .map(r => (r.getLong(0), Option(r.getString(1)))).sortBy(_._1).toSeq
-      val plain = run(graft.ops.AsOfJoin.asOf(
+      val plain = run(AsOfReference.asOf(
         left, right, Seq("k"), "ets", "rts", Seq("v")))
       for (b <- buckets.distinct) {
         val bucketed = run(graft.ops.AsOfJoin.asOfBucketed(
