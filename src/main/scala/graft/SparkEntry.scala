@@ -232,9 +232,9 @@ object SparkEntry {
   }
 
   /** Flagship: the full KG extraction pipeline over the synthesized doc
-    * table at sf0.001; driver smoke-checks rows>0. */
+    * table of the vendored sf0.001 corpus; callers smoke-check rows > 0. */
   def entry(spark: SparkSession): DataFrame =
-    Extraction.triples(SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")).toDF()
+    Extraction.triples(SynthDocs.fromDocuments(spark, SynthDocs.corpusDir)).toDF()
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- S2/P1: scan + filter + projection --------------------------------

@@ -1,90 +1,69 @@
 package graft.extract
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructType}
 
-import graft.functions.Converters
-import graft.model.{Doc, NS, RdfTriple, Span, ValidationError}
+import graft.model.{NS, RdfTriple, ValidationError}
 
 /** Doc table → RDF triples + error side channel.
   *
   * The whole of the reference's `process_rows`/`map_row_to_rdf` pass
   * (reference: src/csv_to_rdf.py:165-296,352-374) as ONE narrow Catalyst
-  * plan: `scan → typed flatMap(doc → triples) → out`. No driver loop, no
-  * collect, NO SHUFFLE — per-doc in-closure set-dedup realizes rdflib's
-  * set semantics (SURVEY.md §2.8 U1) because every extraction triple is
-  * doc-scoped.
+  * plan: `scan → generate(span dispatch) → out`, where the dispatch
+  * ([[ExtractSpans]]) reads the doc rows and writes triple rows without a
+  * Scala object in between. No collect, NO SHUFFLE —
+  * per-doc set-dedup realizes rdflib's set semantics (SURVEY.md §2.8 U1)
+  * because every extraction triple is doc-scoped.
   */
 object Extraction {
 
-  import FieldSpecs.NameKind
-
   /** Data triples (no schema graph), deduplicated with set semantics.
-    *
-    * Doc-level typed path: one closure call per DOCUMENT (not per span);
-    * [[SpanProcessor]] emits the flat [[RdfTriple]] rows, doc id included,
-    * so there is no nested-struct encoder, no explode operator and no
-    * per-triple copy.
     *
     * Set semantics WITHOUT a shuffle: every triple the extraction emits has
     * a doc-scoped subject (all minted URIs embed the doc id; the ingest
     * guarantees unique doc ids via duplicate suffixing), so identical
-    * triples can only originate within one document — a per-doc in-closure
-    * dedup is exactly equivalent to a global `dropDuplicates`, and the
-    * whole stage stays narrow (rdflib-Graph-per-row semantics of the
-    * reference, csv_to_rdf.py:176, realized shuffle-free). */
+    * triples can only originate within one document — a per-doc dedup is
+    * exactly equivalent to a global `dropDuplicates`, and the whole stage
+    * stays narrow (rdflib-Graph-per-row semantics of the reference,
+    * csv_to_rdf.py:176, realized shuffle-free). */
   def triples(docs: DataFrame): Dataset[RdfTriple] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.as[Doc].flatMap { doc =>
-      val seen = new java.util.HashSet[RdfTriple]()
-      spanResults(doc, originalName(doc)).flatMap { case (_, res) =>
-        res.triples.iterator.filter(seen.add) // per-doc set semantics, no shuffle needed
-      }
-    }
+    dispatch(docs, errors = false).as[RdfTriple]
   }
 
   /** Validation errors incl. the no-data rows (csv_to_rdf.py:286-288) —
-    * same doc-level typed pass as [[triples]]: per doc, either its
-    * span errors (with the converted fullname, like the reference's error
-    * rows) or the single no-data row when nothing was emitted. */
+    * the same span dispatch as [[triples]]: per doc, either its span errors
+    * (with the converted fullname, like the reference's error rows) or the
+    * single no-data row when nothing was emitted. */
   def errors(docs: DataFrame): Dataset[ValidationError] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.as[Doc].flatMap { doc =>
-      val name = originalName(doc)
-      val fullname =
-        if (name.isEmpty) "" else Converters.convertPersonName(name).full
-      var emitted = false
-      val errs = spanResults(doc, name).flatMap { case (s, res) =>
-        if (res.triples.nonEmpty) emitted = true
-        res.errors.map(e => ValidationError(doc.doc_id, fullname, s.kind, e, s.text))
-      }.toVector
-      if (!emitted)
-        errs :+ ValidationError(doc.doc_id, fullname, "", "Ei tietoa henkilöstä", "")
-      else errs
-    }
+    dispatch(docs, errors = true).as[ValidationError]
   }
 
-  /** The doc's raw name span text, "" if it has none. */
-  private def originalName(doc: Doc): String =
-    doc.spans.collectFirst { case Span(NameKind, text, _, _) => text }.getOrElse("")
-
-  /** Per-doc span dispatch shared by [[triples]] and [[errors]]: each span
-    * in order with its [[SpanResult]] — the name span through the name
-    * converter, mapped kinds through their [[FieldSpecs]] row, unmapped
-    * kinds empty. */
-  private def spanResults(doc: Doc, originalName: String): Iterator[(Span, SpanResult)] =
-    doc.spans.iterator.map { s =>
-      val res =
-        if (s.kind == NameKind) SpanProcessor.processName(doc.doc_id, s.text)
-        else FieldSpecs.byKind.get(s.kind) match {
-          case Some(spec) =>
-            SpanProcessor.process(spec, doc.doc_id, s.text, s.offset, originalName)
-          case None => SpanResult(Nil, Nil)
-        }
-      s -> res
+  /** [[ExtractSpans]] over `docs`' `doc_id` and `spans`, the span struct's
+    * `kind`, `text` and `offset` resolved by name like an `as[Doc]` would:
+    * other columns, other span fields and any column order are fine. */
+  private def dispatch(docs: DataFrame, errors: Boolean): DataFrame = {
+    val in = docs.select(col("doc_id").cast(StringType).as("doc_id"), col("spans"))
+    val span = in.schema("spans").dataType match {
+      case ArrayType(s: StructType, _) => s
+      case t => throw new IllegalArgumentException(s"spans must be an array of structs, got $t")
     }
+    def at(name: String, dataType: DataType): Int = {
+      val i = span.fields.indexWhere(f => SQLConf.get.resolver(f.name, name))
+      require(i >= 0 && span(i).dataType == dataType,
+        s"spans must have a $name field of type ${dataType.simpleString}, got ${span.simpleString}")
+      i
+    }
+    in.select(Bridge.column(ExtractSpans(Bridge.expression(col("doc_id")),
+      Bridge.expression(col("spans")), at("kind", StringType), at("text", StringType),
+      at("offset", IntegerType), errors)))
+  }
 
   /** Schema graph derived from the FieldSpec table
     * (reference: src/csv_to_rdf.py:367-374), concatenated with the static

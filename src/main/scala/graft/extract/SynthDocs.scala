@@ -30,6 +30,12 @@ object SynthDocs {
     "Kiihtelysvaara", "Lavia", "Hämeenlinna", "Ylämaa", "Sortavala", "Käkisalmi", "Kuopio")
   private val camps = Seq("74", "75", "99", "135", "158", "1825", "Vienan Kemi", "Arkangel")
 
+  /** The sf0.001 tables vendored with the benchmark (the 500-document
+    * `documents.parquet`, `embeddings.parquet`, …), relative to the
+    * checkout root: the default input of `SparkEntry.entry` and
+    * `RunPipeline`. */
+  val corpusDir = "perfbench/data"
+
   private def pick(values: Seq[String], idx: org.apache.spark.sql.Column) =
     element_at(typedlit(values), pmod(idx, lit(values.size)).cast("int") + 1)
 

@@ -100,18 +100,21 @@ object Converters {
   def convertMarital(raw: String): String =
     maritalStatusMap.getOrElse(raw, NS.MARITAL + "Tuntematon")
 
+  private val reMarks = Pattern.compile("\\p{M}+")
+  private val reSpaces = Pattern.compile("\\s+")
+
   /** ASCII slugify equivalent to the `python-slugify` calls the reference
     * makes for camp/source URI minting (src/csv_to_rdf.py:388,
     * src/linker.py:471,488): unicode fold → lowercase → non-alnum runs
     * collapse to single `-`, trimmed. */
   def slugify(raw: String): String = {
-    val folded = java.text.Normalizer.normalize(raw, java.text.Normalizer.Form.NFKD)
-      .replaceAll("\\p{M}+", "")
+    val folded = reMarks.matcher(
+      java.text.Normalizer.normalize(raw, java.text.Normalizer.Form.NFKD)).replaceAll("")
     val sb = new java.lang.StringBuilder(folded.length)
     folded.toLowerCase.foreach { c =>
       if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) sb.append(c) else sb.append(' ')
     }
-    sb.toString.trim.replaceAll("\\s+", "-")
+    reSpaces.matcher(sb.toString.trim).replaceAll("-")
   }
 
   /** Lenient date cast used by privacy pruning: strip `Xx-` padding, try a
@@ -132,7 +135,7 @@ object Converters {
   // missing month/day to 1 — privacy decisions only compare at year
   // granularity vs fixed cutoffs).
   private val reDmy = Pattern.compile("(\\d{1,2})[./](\\d{1,2})[./](\\d{4})")
-  private val reY = Pattern.compile("(?:^|\\D)(\\d{4})(?:\\D|$)")
+  private val reYear = Pattern.compile("\\d{4}")
   private def parseLenient(s: String): java.sql.Date = {
     val t = PyStr.strip(s)
     if (t.isEmpty) return null
@@ -146,7 +149,7 @@ object Converters {
       if (md != null) return md
       return null
     }
-    if (t.matches("\\d{4}")) return tryYmd(t.toInt, 1, 1)
+    if (reYear.matcher(t).matches()) return tryYmd(t.toInt, 1, 1)
     // embedded single year like "noin 2002" / "6-7.11.1947" last-4 path
     null
   }

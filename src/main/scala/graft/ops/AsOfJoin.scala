@@ -19,27 +19,14 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
-  /** Debug guard for the right-uniqueness contract: fails fast when any
-    * (key, ts) holds more than one right row (where the operators would
-    * otherwise silently pick an arbitrary winner). One aggregate pass —
-    * call it in tests / on suspect inputs, not per production run. */
-  def requireUniqueRight(right: DataFrame, keys: Seq[String], rightTs: String): Unit = {
-    val dup = right.filter(col(rightTs).isNotNull)
-      .groupBy((keys :+ rightTs).map(col): _*)
-      .count().filter(col("count") > 1)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      s"as-of right side not unique per (${keys.mkString(",")}, $rightTs): e.g. ${dup.mkString}")
-  }
-
   /** Skew-safe as-of join. Semantics:
     *  - inclusive: a right row at exactly `leftTs` matches (right rows sort
     *    BEFORE left rows at equal timestamps);
     *  - all payload columns are carried as ONE struct, so they always come
     *    from the SAME right row even when some payload values are null;
-    *  - right should be unique per (key, ts) — dedupe upstream (see
-    *    [[requireUniqueRight]]); otherwise an arbitrary co-timestamped
-    *    right row wins;
+    *  - right should be unique per (key, ts) — dedupe upstream; otherwise
+    *    an arbitrary co-timestamped right row wins (the specs check the
+    *    contract with `AsOfReference.requireUniqueRight`);
     *  - left rows with no right row at or before them emit null payloads
     *    (left-outer semantics; filter afterwards for inner);
     *  - a right row with a null `rightTs` matches nothing; a null `leftTs`

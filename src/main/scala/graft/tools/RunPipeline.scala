@@ -6,11 +6,12 @@ import graft.extract.SynthDocs
 import graft.pipeline.{Pipeline, SnapshotStore}
 
 /** spark-submit entrypoint for the full KG pipeline:
-  * `runMain graft.tools.RunPipeline <sfDir> <workDir>` — runs (or resumes)
+  * `runMain graft.tools.RunPipeline [sfDir] [workDir]` (default: the
+  * vendored corpus `perfbench/data`) — runs (or resumes)
   * every stage, prints per-stage manifests and the final triple count. */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
+    val sfDir = if (args.length > 0) args(0) else SynthDocs.corpusDir
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val replicate = if (args.length > 2) args(2).toInt else 1
     val spark = SparkSession.builder()

@@ -10,6 +10,18 @@ import org.apache.spark.sql.functions._
   * partitioned by the key alone, so a hot key serializes into one task. */
 object AsOfReference {
 
+  /** Guard for the right-uniqueness contract of both forms: fails when any
+    * (key, ts) holds more than one right row (where the operators would
+    * otherwise silently pick an arbitrary winner). One aggregate pass. */
+  def requireUniqueRight(right: DataFrame, keys: Seq[String], rightTs: String): Unit = {
+    val dup = right.filter(col(rightTs).isNotNull)
+      .groupBy((keys :+ rightTs).map(col): _*)
+      .count().filter(col("count") > 1)
+      .limit(1).collect()
+    require(dup.isEmpty,
+      s"as-of right side not unique per (${keys.mkString(",")}, $rightTs): e.g. ${dup.mkString}")
+  }
+
   def asOf(left: DataFrame, right: DataFrame, keys: Seq[String],
            leftTs: String, rightTs: String, payloads: Seq[String]): DataFrame = {
     val leftCols = left.columns.toSeq

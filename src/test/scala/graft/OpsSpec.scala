@@ -236,9 +236,9 @@ class OpsSpec extends AnyFunSuite {
 
     // right-uniqueness debug guard: clean dim passes, a duplicated
     // (k, ts) trips the require
-    graft.ops.AsOfJoin.requireUniqueRight(dim, Seq("k"), "dim_ts")
+    AsOfReference.requireUniqueRight(dim, Seq("k"), "dim_ts")
     intercept[IllegalArgumentException] {
-      graft.ops.AsOfJoin.requireUniqueRight(dim.unionByName(dim), Seq("k"), "dim_ts")
+      AsOfReference.requireUniqueRight(dim.unionByName(dim), Seq("k"), "dim_ts")
     }
   }
 
@@ -654,8 +654,12 @@ class OpsSpec extends AnyFunSuite {
     // corpora so a regenerated corpus cannot silently invalidate the
     // oracle (round-5 advice #4): cosine(v, e_k) = 1 requires v to be a
     // positive multiple of e_k, i.e. every other component exactly 0.
-    Seq("sf0.001", "sf0.01", "sf0.1").foreach { sf =>
-      val emb = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
+    // sf0.001 ships with the benchmark; the sf0.01 and sf0.1 files are
+    // byte-identical copies of those tiers' embeddings.parquet
+    Seq("sf0.001" -> s"${SparkTestBase.corpusDir}/embeddings.parquet",
+      "sf0.01" -> "src/test/resources/sf0.01/embeddings.parquet",
+      "sf0.1" -> "src/test/resources/sf0.1/embeddings.parquet").foreach { case (sf, path) =>
+      val emb = spark.read.parquet(path)
       val ties = emb.select($"vec_id", $"embedding".cast("array<double>").as("v"))
         .withColumn("nz", size(filter($"v", x => x =!= 0.0d)))
         .withColumn("axis0to3",

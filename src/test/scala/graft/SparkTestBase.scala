@@ -4,10 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestBase {
-  /** The sf0.001 tables vendored with the benchmark (the 500-document
-    * `documents.parquet`, `embeddings.parquet`), relative to the checkout
-    * root. */
-  val corpusDir = "perfbench/data"
+  /** The sf0.001 tables vendored with the benchmark, relative to the
+    * checkout root. */
+  val corpusDir: String = graft.extract.SynthDocs.corpusDir
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
