@@ -1,49 +1,57 @@
 package graft.extract
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.link.Normalize
-import graft.model.{NS, Triples}
+import graft.functions.Converters
+import graft.model.{NS, RdfTriple, Triples}
 
 /** E19/E20 + J16 — subject re-minting and graph closure utilities.
-  */
+  * Re-minting and the camp CONSTRUCT are plain Scala over the collected
+  * (bounded) rows and return a local relation, so the camps chain runs no
+  * Spark job. */
 object CampConversion {
 
-  /** E19: camp/hospital URI re-minting — new subject =
-    * namespace + slugify(prop1 value, else prop2 value, else "unknown");
-    * all triples of the old subject are copied to the new one and the old
-    * ones dropped (reference: src/csv_to_rdf.py:382-398 simulates this
-    * with add+remove loops; here it is one projection + broadcast join —
-    * no mutation). Only subjects of `classUri` are re-minted. */
+  /** E19's minting rule: `namespace` + slugify(the first of `p1`, `p2`
+    * that is present, else "unknown"). [[remintSubjects]] and the camp
+    * gazetteer (`Gazetteers.camps`) both mint through it. */
+  def mintSubject(namespace: String, p1: Option[String], p2: Option[String]): String =
+    namespace + Converters.slugify(p1.orElse(p2).getOrElse("unknown"))
+
+  /** The camps graph: camps, then hospitals, re-minted under their slugified
+    * URI spaces, then the camp CONSTRUCT (process.sh:20-23). `raw` must be
+    * bounded: it is collected. */
+  def campGraph(raw: DataFrame): DataFrame = {
+    def remint(in: DataFrame, cls: String, prefix: String) = remintSubjects(in,
+      NS.SCHEMA_WARSA + cls, NS.SCHEMA_POW + "camp_id", NS.SCHEMA_POW + "captivity_location",
+      NS.DATA + prefix)
+    constructCamps(remint(remint(raw, "PowCamp", "camp_"), "PowHospital", "hospital_"))
+  }
+
+  /** E19: camp/hospital URI re-minting — each subject typed `classUri` is
+    * renamed to [[mintSubject]] of its least literal `prop1` and `prop2`
+    * values (least in code-point order, as Spark's `min` orders strings);
+    * all its triples move to the new subject (reference:
+    * src/csv_to_rdf.py:382-398 simulates this with add+remove loops).
+    * `triples` must be bounded: it is collected. */
   def remintSubjects(triples: DataFrame, classUri: String,
                      prop1: String, prop2: String, namespace: String): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-
-    val targets = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === classUri)
-      .select($"subj").distinct()
-
-    // plain aliases: property URIs contain dots, which Column-name parsing
-    // would read as struct-field access
-    def valueOf(prop: String, alias: String) =
-      triples.filter($"pred" === prop && !$"objIsUri")
-        .groupBy($"subj").agg(min($"objValue").as(alias))
-
-    val mapping = targets
-      .join(valueOf(prop1, "__p1"), Seq("subj"), "left")
-      .join(valueOf(prop2, "__p2"), Seq("subj"), "left")
-      .select($"subj",
-        concat(lit(namespace),
-          Normalize.slugifyCol(coalesce($"__p1", $"__p2", lit("unknown"))))
-          .as("new_subj"))
-
-    triples.join(broadcast(mapping), Seq("subj"), "left")
-      .select(Triples.columns(coalesce($"new_subj", $"subj"), $"pred", $"objValue",
-        $"objIsUri", $"objLang", $"objDatatype", $"docId"): _*)
-      .transform(Triples.distinct)
+    val rows = Triples.collect(triples)
+    val targets = rows.filter(t => t.pred == NS.RDF_TYPE && t.objValue == classUri).map(_.subj).toSet
+    def least(prop: String): Map[String, String] = rows
+      .filter(t => t.pred == prop && !t.objIsUri && t.objValue != null && targets(t.subj))
+      .groupMapReduce(_.subj)(_.objValue)((a, b) => if (binaryCompare(a, b) <= 0) a else b)
+    val (v1, v2) = (least(prop1), least(prop2))
+    val minted = targets.map(s => s -> mintSubject(namespace, v1.get(s), v2.get(s))).toMap
+    triples.sparkSession.createDataFrame(Triples.distinctRows(
+      rows.map(t => minted.get(t.subj).fold(t)(s => t.copy(subj = s)))))
   }
+
+  private def binaryCompare(a: String, b: String): Int =
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   /** The camp CONSTRUCT (sparql/construct_camps.sparql, run
     * process.sh:23), branch-faithful to the SPARQL:
@@ -59,66 +67,46 @@ object CampConversion {
     *    combination with the IF(BOUND) space rule;
     *  - coordinates OPTIONAL (:32-36): wgs84 lat/long via REPLACE — a
     *    non-matching literal passes through RAW (SPARQL REPLACE returns
-    *    its input unchanged when the pattern misses), so the mirror uses
-    *    regexp_replace with NO match filter.
-    * All joins are against the (tiny) camp-subject set → broadcast. */
+    *    its input unchanged when the pattern misses).
+    * `triples` must be bounded: it is collected. */
   def constructCamps(triples: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val wgs = "http://www.w3.org/2003/01/geo/wgs84_pos#"
-
-    def subjectsOf(cls: String) = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + cls))
-      .select($"subj").distinct()
-    val campLoc = triples
-      .filter($"pred" === (NS.SCHEMA_POW + "captivity_location"))
+    val rows = Triples.collect(triples)
+    val (pow, wgs) = (NS.SCHEMA_POW, "http://www.w3.org/2003/01/geo/wgs84_pos#")
+    def subjectsOf(cls: String) =
+      rows.filter(t => t.pred == NS.RDF_TYPE && t.objValue == NS.SCHEMA_WARSA + cls).map(_.subj).toSet
+    def values(pred: String): Map[String, Seq[String]] =
+      rows.filter(_.pred == pred).groupMap(_.subj)(_.objValue)
+    val locations = values(pow + "captivity_location")
     // required pattern: camps WITHOUT a captivity_location emit nothing
-    // broadcast hints sit on the join sides only: Spark ignores (and
-    // warns about) a hint inside a union or on a left outer join's left side
-    val campSubj = subjectsOf("PowCamp")
-      .join(campLoc.select($"subj").distinct(), Seq("subj"), "left_semi")
-    val hospSubj = subjectsOf("PowHospital")
-    val branchSubj = campSubj.unionByName(hospSubj).distinct()
+    val camps = subjectsOf("PowCamp").filter(locations.contains)
+    val hospitals = subjectsOf("PowHospital")
 
-    val campOwn = triples.join(broadcast(campSubj), Seq("subj"), "left_semi")
-      .filter($"pred" =!= (NS.SCHEMA_POW + "huomautuksia-poistetaan-kun-asiat-on-kayty-lapi"))
-    val hospOwn = triples.join(broadcast(hospSubj), Seq("subj"), "left_semi")
-      .filter($"pred" =!= (NS.SCHEMA_POW + "poistettava-tyosarake"))
+    val own = rows.filter(t =>
+      (camps(t.subj) && t.pred != pow + "huomautuksia-poistetaan-kun-asiat-on-kayty-lapi") ||
+        (hospitals(t.subj) && t.pred != pow + "poistettava-tyosarake"))
+    // one label per literal captivity_location VALUE (per-solution BIND)
+    val campLabels = rows.filter(t => camps(t.subj) && t.pred == pow + "captivity_location" && !t.objIsUri)
+      .map(t => RdfTriple.langLit(t.subj, NS.SKOS_PREF_LABEL, t.objValue, "fi"))
+    // one label per OPTIONAL (type, camp_id) combination; an absent value is null
+    val (types, ids) = (values(pow + "hospital_type"), values(pow + "camp_id"))
+    val hospitalLabels = rows.map(_.subj).distinct.filter(hospitals).flatMap { s =>
+      for (h <- types.getOrElse(s, Seq(null)); id <- ids.getOrElse(s, Seq(null)))
+        yield RdfTriple.langLit(s, NS.SKOS_PREF_LABEL,
+          (if (h == null) "" else h + " ") + (if (id == null) "" else id), "fi")
+    }
+    // REPLACE semantics: a coordinate literal that misses the pattern
+    // passes through unchanged, exactly like the reference
+    def replace(v: String, pattern: Pattern) = if (v == null) null else pattern.matcher(v).replaceAll("$1")
+    val coordinates = rows.filter(t => (camps(t.subj) || hospitals(t.subj)) && t.pred == pow + "coordinates")
+      .flatMap(t => Seq(RdfTriple.lit(t.subj, wgs + "lat", replace(t.objValue, latitude)),
+        RdfTriple.lit(t.subj, wgs + "long", replace(t.objValue, longitude))))
 
-    val fiLabel = Triples.literal($"subj", lit(NS.SKOS_PREF_LABEL), $"label", lit("fi"))
-
-    // one label per captivity_location VALUE (per-solution BIND)
-    val campLabels = campLoc.filter(!$"objIsUri")
-      .join(broadcast(campSubj), Seq("subj"), "left_semi")
-      .select($"subj", $"objValue".as("label")).distinct()
-      .select(fiLabel: _*)
-
-    // one label per OPTIONAL (type, camp_id) combination
-    val hospLabels = hospSubj
-      .join(triples.filter($"pred" === (NS.SCHEMA_POW + "hospital_type"))
-        .select($"subj", $"objValue".as("htype")), Seq("subj"), "left")
-      .join(triples.filter($"pred" === (NS.SCHEMA_POW + "camp_id"))
-        .select($"subj", $"objValue".as("cid")), Seq("subj"), "left")
-      .select($"subj", concat(
-        coalesce($"htype", lit("")),
-        when($"htype".isNotNull, lit(" ")).otherwise(lit("")),
-        coalesce($"cid", lit(""))).as("label")).distinct()
-      .select(fiLabel: _*)
-
-    // REPLACE semantics: no filter — a coord literal that misses the
-    // regex passes through unchanged, exactly like the reference
-    val coords = triples.filter($"pred" === (NS.SCHEMA_POW + "coordinates"))
-      .join(broadcast(branchSubj), Seq("subj"), "left_semi")
-      .select($"subj",
-        regexp_replace($"objValue", "(\\d\\d\\.\\d+),.*", "$1").as("lat"),
-        regexp_replace($"objValue", ".*,\\W*(\\d\\d\\.\\d+)$", "$1").as("long"))
-
-    campOwn.unionByName(hospOwn)
-      .unionByName(campLabels).unionByName(hospLabels)
-      .unionByName(coords.select(Triples.literal($"subj", lit(wgs + "lat"), $"lat"): _*))
-      .unionByName(coords.select(Triples.literal($"subj", lit(wgs + "long"), $"long"): _*))
-      .transform(Triples.distinct)
+    triples.sparkSession.createDataFrame(
+      Triples.distinctRows(own ++ campLabels ++ hospitalLabels ++ coordinates))
   }
+
+  private val latitude = Pattern.compile("(\\d\\d\\.\\d+),.*")
+  private val longitude = Pattern.compile(".*,\\W*(\\d\\d\\.\\d+)$")
 
   /** J16: all triples related to a set of persons — the person's own
     * triples, a 1-hop object expansion, and the reifications of the

@@ -10,10 +10,10 @@ import graft.model.NS
   * original string passed through (the reference keeps unparseable dates —
   * incl. partial `xx.7.1944` forms — as plain string literals;
   * src/converters.py:16-38, golden test_data/prisoners.ttl:229). */
-final case class DateOrString(date: java.sql.Date, raw: String) {
+final case class DateOrString(date: LocalDate, raw: String) {
   def isDate: Boolean = date != null
   /** Literal lexical form as the reference emits it. */
-  def lexical: String = if (isDate) date.toLocalDate.toString else raw
+  def lexical: String = if (isDate) date.toString else raw
 }
 
 final case class PersonName(given: String, family: String, full: String)
@@ -47,7 +47,7 @@ object Converters {
       val a = tryParse(fmtSlash, reSlashShape)
       if (a != null) a else tryParse(fmtDot, reDotShape)
     }
-    if (d != null) DateOrString(java.sql.Date.valueOf(d), raw) else DateOrString(null, raw)
+    DateOrString(d, raw)
   }
 
   // reference: src/converters.py:48-49

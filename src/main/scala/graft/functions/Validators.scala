@@ -23,7 +23,7 @@ object Validators {
       if (s == null || s.isEmpty) return None
       return if (!s.startsWith("xx")) Some("Päivämäärä ei ole kelvollinen") else None
     }
-    val d = resolved.date.toLocalDate
+    val d = resolved.date
     if (d.isBefore(after)) Some(s"Päivämäärä $d liian varhainen (< $after)")
     else if (d.isAfter(before)) Some(s"Päivämäärä $d liian myöhäinen (> $before)")
     else None

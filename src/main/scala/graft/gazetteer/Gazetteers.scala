@@ -3,6 +3,7 @@ package graft.gazetteer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.extract.CampConversion
 import graft.model.{NS, RdfTriple}
 
 /** Synthetic, deterministic gazetteers — the broadcast dimension side of
@@ -116,22 +117,19 @@ object Gazetteers {
         $"label", $"place_type")
   }
 
-  /** Camps/hospitals: (uri, camp_id, captivity_location)
+  /** Camps/hospitals: (uri, camp_id, captivity_location, coordinates)
     * (sparql/construct_camps.sparql:13-34 + linker.py:79-83 aliases).
-    * URIs are minted with the SAME rule the pipeline's camps-conversion
-    * stage uses (E19: `camp_`/`hospital_` + slugify(camp_id else
-    * captivity_location), CampConversion.remintSubjects), so link targets
-    * and the converted camp graph share one URI space — the role Fuseki's
-    * single warsa graph plays in the reference (process.sh:20-23). */
+    * URIs are minted by `CampConversion.mintSubject`, the rule the
+    * pipeline's camps-conversion stage re-mints with (E19: `camp_`/
+    * `hospital_` + slugify(camp_id else captivity_location)), so link
+    * targets and the converted camp graph share one URI space — the role
+    * Fuseki's single warsa graph plays in the reference (process.sh:20-23). */
   def camps(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    (rawCampRows.map { case (_, id, loc, coord, hospital) =>
-      val prefix = if (hospital) "hospital_" else "camp_"
-      val slug = graft.functions.Converters.slugify(if (id.nonEmpty) id else loc)
-      (s"$prefix$slug", id, loc, coord)
-    }).toDF("local", "camp_id", "captivity_location", "coordinates")
-      .select(concat(lit(NS.DATA), $"local").as("uri"), $"camp_id",
-        $"captivity_location", $"coordinates")
+    rawCampRows.map { case (_, id, loc, coord, hospital) =>
+      val namespace = NS.DATA + (if (hospital) "hospital_" else "camp_")
+      (CampConversion.mintSubject(namespace, Some(id).filter(_.nonEmpty), Some(loc)), id, loc, coord)
+    }.toDF("uri", "camp_id", "captivity_location", "coordinates")
   }
 
   /** (rowIdx, camp_id, captivity_location, coordinates, isHospital) — the

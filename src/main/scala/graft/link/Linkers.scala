@@ -1,11 +1,13 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import java.util.regex.Pattern
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Converters
-import graft.model.{NS, Triples}
+import graft.model.{NS, RdfTriple, Triples}
 
 /** Label normalization shared by all gazetteer joins (the role ARPA's
   * lemmatize/fold plays in the reference). */
@@ -272,91 +274,84 @@ object Linkers {
   }
 
   /** J10: Sotilaan Ääni magazine references — exact multimap equi-join
-    * (linker.py:267-313). Returns (links, documents) triples. */
+    * (linker.py:267-313). Returns (links, documents) triples. The bounded
+    * `index` is collected: entry URIs and documents are built on the driver. */
   def linkMagazines(triples: DataFrame, index: DataFrame): (DataFrame, DataFrame) = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val idx = index.select(
-      regexp_replace($"viite", "^\\s+|\\s+$", "").as("k"),
-      concat(lit(NS.MEDIA), lit("sotilaan_aani_"), $"hakemisto", lit("_"), $"tiedostonimi").as("uri"),
-      $"hakemisto", $"tiedostonimi")
-
+    val entries = index.select($"viite", $"hakemisto", $"tiedostonimi").as[(String, String, String)]
+      .collect().toSeq.map { case (ref, dir, file) =>
+        (Option(ref).map(trim.matcher(_).replaceAll("")).orNull, s"${NS.MEDIA}sotilaan_aani_${dir}_$file",
+          s"Sotilaan Ääni $dir/$file", s"https://static.sotasampo.fi/sotilaan_aani/$dir/Thumbs/$file.jpg")
+      }
     val refs = literals(triples, NS.SCHEMA_POW + "sotilaan_aani")
       .unionByName(literals(triples, NS.SCHEMA_POW + "photograph_sotilaan_aani"))
-      .withColumn("k", regexp_replace($"literal", "^\\s+|\\s+$", ""))
-
+      .withColumn("k", regexp_replace($"literal", trim.pattern, ""))
     // a textual reference may hit several issues (multimap) — natural fanout
-    val hits = refs.join(broadcast(idx), "k")
+    val hits = refs.join(broadcast(entries.map(i => (i._1, i._2)).toDF("k", "uri")), "k")
     val links = hits.select(
       Triples.uri($"subj", lit(NS.SCHEMA_WARSA + "sotilaan_aani_magazine"), $"uri", $"docId"): _*)
-
-    val docs = idx.select($"uri", $"hakemisto", $"tiedostonimi").distinct()
-      .select($"uri",
-        concat(lit("Sotilaan Ääni "), $"hakemisto", lit("/"), $"tiedostonimi").as("label"),
-        concat(lit("https://static.sotasampo.fi/sotilaan_aani/"), $"hakemisto",
-          lit("/Thumbs/"), $"tiedostonimi", lit(".jpg")).as("contentUrl"))
-    (links, mediaDocTriples(docs, NS.SCHEMA_WARSA + "SotilaanAani"))
+    (links, mediaDocTriples(spark, NS.SCHEMA_WARSA + "SotilaanAani", entries.map(i => (i._2, i._3, i._4))))
   }
 
+  private val trim = Pattern.compile("^\\s+|\\s+$")
+
   /** J11: person-document PDFs — regex over a paths table + id equi-join
-    * (linker.py:316-363). */
+    * (linker.py:316-363). The bounded `paths` table is collected. */
   def linkPersonDocuments(paths: DataFrame /* (path) */): (DataFrame, DataFrame) = {
     val spark = paths.sparkSession
-    import spark.implicits._
-    val re = "data/person_documents/([a-z_]+)/(\\d{1,4})(_.+\\.pdf)"
-    val parsed = paths
-      .select(regexp_extract($"path", re, 1).as("dir"),
-        regexp_extract($"path", re, 2).as("pid"),
-        regexp_extract($"path", re, 3).as("suffix"))
-      .filter($"dir" =!= "" && $"pid" =!= "" && $"suffix" =!= "")
-    val labelMap = typedlit(Map(
+    val re = Pattern.compile("data/person_documents/([a-z_]+)/(\\d{1,4})(_.+\\.pdf)")
+    val labels = Map(
       "returned" -> "Neuvostoliittolainen palautettujen henkilömappi",
       "winterwar_registration" -> "Neuvostoliittolainen vangittujen ja internoitujen henkilömappi",
-      "winterwar_interrogation" -> "Neuvostoliittolainen kuulustelulomake"))
-    val rows = parsed.select(
-      concat(lit(NS.DATA), lit("prisoner_"), $"pid").as("subj"),
-      concat(lit(NS.MEDIA), $"dir", lit("_"), $"pid").as("uri"),
-      coalesce(element_at(labelMap, $"dir"), lit("Dokumentti")).as("label"),
-      concat(lit("https://static.sotasampo.fi/person_documents/"), $"dir", lit("/"),
-        $"pid", $"suffix").as("contentUrl"),
-      concat(lit("prisoner_"), $"pid").as("docId"))
-    val links = rows.select(
-      Triples.uri($"subj", lit(NS.SCHEMA_WARSA + "person_document"), $"uri", $"docId"): _*)
-    (links, mediaDocTriples(rows.select($"uri", $"label", $"contentUrl").distinct(),
-      NS.SCHEMA_WARSA + "PersonDocument"))
+      "winterwar_interrogation" -> "Neuvostoliittolainen kuulustelulomake")
+    val (links, docs) = paths.select("path").collect().toSeq
+      .flatMap(r => Option(r.getString(0)).map(re.matcher(_)).filter(_.find()))
+      .map { m =>
+        val (dir, pid) = (m.group(1), m.group(2))
+        val uri = s"${NS.MEDIA}${dir}_$pid"
+        (RdfTriple.uri(s"${NS.DATA}prisoner_$pid", NS.SCHEMA_WARSA + "person_document", uri, s"prisoner_$pid"),
+          (uri, labels.getOrElse(dir, "Dokumentti"),
+            s"https://static.sotasampo.fi/person_documents/$dir/$pid${m.group(3)}"))
+      }.unzip
+    (spark.createDataFrame(links), mediaDocTriples(spark, NS.SCHEMA_WARSA + "PersonDocument", docs))
   }
 
   /** J12: videos — comma-separated filename split + id/URI joins
-    * (linker.py:366-450). */
+    * (linker.py:366-450). The bounded `index` and `labels` are collected. */
   def linkVideos(index: DataFrame, labels: DataFrame): (DataFrame, DataFrame) = {
     val spark = index.sparkSession
     import spark.implicits._
-    val exploded = index
-      .select($"nro", $"warsa_uri",
-        explode(filter(transform(split(coalesce($"video_files", lit("")), ","),
-          v => regexp_replace(v, "\\s+", "")), v => v =!= "")).as("video_file"))
-      .join(broadcast(labels), Seq("video_file"), "left")
-      .select($"nro", $"warsa_uri", $"video_file", $"label",
-        concat(lit(NS.MEDIA), lit("video_"),
-          Normalize.slugifyCol($"video_file")).as("uri"),
-        concat(lit("https://static.sotasampo.fi/videos/prisoners/"), $"video_file").as("contentUrl"))
-
-    val video = lit(NS.SCHEMA_WARSA + "documented_in_video")
-    val prisonerLinks = exploded.filter($"nro".isNotNull)
-      .select(Triples.uri(concat(lit(NS.DATA), lit("prisoner_"), $"nro"), video, $"uri",
-        concat(lit("prisoner_"), $"nro")): _*)
-    val warsaLinks = exploded.filter($"warsa_uri".isNotNull)
-      .select(Triples.uri($"warsa_uri", video, $"uri"): _*)
-
-    val docs = mediaDocTriples(
-      exploded.select($"uri", coalesce($"label", lit("Video")).as("label"),
-        $"contentUrl").distinct(),
-      NS.SCHEMA_WARSA + "Video")
+    val labelsOf = labels.select($"video_file", $"label").as[(String, String)].collect()
+      .toSeq.groupMap(_._1)(_._2)
+    // one row per (index row, file, label); a file without a label keeps one
+    val videos = index.select($"nro", $"video_files", $"warsa_uri").as[(String, String, String)]
+      .collect().toSeq.flatMap { case (nro, files, warsaUri) =>
+        Option(files).getOrElse("").split(",").map(_.replaceAll("\\s+", "")).filter(_.nonEmpty)
+          .flatMap(f => labelsOf.getOrElse(f, Seq(null)).map(label => (nro, warsaUri, f,
+            NS.MEDIA + "video_" + Converters.slugify(f), label)))
+      }
+    val video = NS.SCHEMA_WARSA + "documented_in_video"
     // links (prisoner + warsa actor) go to the prisoners graph
     // (person_video_links.ttl); doc entities to the media graph
     // (_media_videos.ttl) — process.sh:68-71,126-128
-    (prisonerLinks.unionByName(warsaLinks), docs)
+    val links =
+      videos.collect { case (nro, _, _, uri, _) if nro != null =>
+        RdfTriple.uri(s"${NS.DATA}prisoner_$nro", video, uri, s"prisoner_$nro")
+      } ++ videos.collect { case (_, warsaUri, _, uri, _) if warsaUri != null =>
+        RdfTriple.uri(warsaUri, video, uri)
+      }
+    (spark.createDataFrame(links), mediaDocTriples(spark, NS.SCHEMA_WARSA + "Video",
+      videos.map { case (_, _, f, uri, label) =>
+        (uri, Option(label).getOrElse("Video"), "https://static.sotasampo.fi/videos/prisoners/" + f)
+      }))
   }
+
+  /** The media graph (prisoners_media.ttl, process.sh:126-128): the
+    * document entities of the media linkers as one triple set, deduplicated
+    * on the driver. The frames must be bounded: they are collected. */
+  def mediaGraph(entities: DataFrame*): DataFrame =
+    entities.head.sparkSession.createDataFrame(Triples.distinctRows(entities.flatMap(Triples.collect)))
 
   /** J13: sources — slugified label join vs register with on-the-fly minting
     * of unseen sources; dct:source literals are rewritten to URIs in place
@@ -403,14 +398,12 @@ object Linkers {
   }
 
   /** Shared media-document resource emission (type + label + contentUrl —
-    * linker.py:289-292,357-359,443-446). */
-  private def mediaDocTriples(docs: DataFrame /* (uri,label,contentUrl) */,
-                              cls: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(Triples.uri($"uri", lit(NS.RDF_TYPE), lit(cls)): _*)
-      .unionByName(docs.select(Triples.literal($"uri", lit(NS.SKOS_PREF_LABEL), $"label"): _*))
-      .unionByName(docs.select(
-        Triples.uri($"uri", lit(NS.SCHEMA_ORG + "contentUrl"), $"contentUrl"): _*))
-  }
+    * linker.py:289-292,357-359,443-446), one set per distinct
+    * (uri, label, contentUrl) document. */
+  private def mediaDocTriples(spark: SparkSession, cls: String,
+                              docs: Seq[(String, String, String)]): DataFrame =
+    spark.createDataFrame(docs.distinct.flatMap { case (uri, label, url) =>
+      Seq(RdfTriple.uri(uri, NS.RDF_TYPE, cls), RdfTriple.lit(uri, NS.SKOS_PREF_LABEL, label),
+        RdfTriple.uri(uri, NS.SCHEMA_ORG + "contentUrl", url))
+    })
 }

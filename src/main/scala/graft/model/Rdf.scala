@@ -147,6 +147,17 @@ object Triples {
 
   /** Set semantics: one row per [[identity]], whatever its `docId`. */
   def distinct(df: DataFrame): DataFrame = df.dropDuplicates(identity)
+
+  /** [[distinct]] on the driver: the first row of each [[identity]]. */
+  def distinctRows(rows: Seq[RdfTriple]): Seq[RdfTriple] = rows.distinctBy(_.copy(docId = ""))
+
+  /** The rows of a bounded triple frame, on the driver. A frame built from
+    * local rows (a local relation and its projections) collects without a
+    * Spark job. */
+  def collect(df: DataFrame): Seq[RdfTriple] = {
+    import df.sparkSession.implicits._
+    df.as[RdfTriple].collect().toSeq
+  }
 }
 
 /** A validation/conversion error row — the reference's errors.csv side

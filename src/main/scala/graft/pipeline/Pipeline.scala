@@ -22,8 +22,10 @@ import graft.privacy.Privacy
   * checkpoint falls out of the snapshot layer (kill the JVM anywhere — on
   * restart, committed stages are read back, the interrupted stage recomputes).
   *
-  * Stage metrics (extraction error rate, per-task link hit counts — the
-  * reference's log counters, linker.py:309-311) land in each stage manifest.
+  * Stage manifests carry row counts only (`rows`, and the `triples`,
+  * `errors` or `links` count a stage observes). Data-quality counters —
+  * extraction error rate, per-task link hit counts (the reference's log
+  * counters, linker.py:309-311) — are not recorded yet (ROADMAP item 6).
   *
   * Shuffle budget (SURVEY.md §4): extraction is narrow; every gazetteer
   * join broadcasts; the only wide exchanges are the triple-set dedup, the
@@ -57,25 +59,12 @@ object Pipeline {
     // slugified camp/hospital URI space -> camp CONSTRUCT (labels +
     // wgs84 coordinates). A separate graph, like the reference's
     // camps.ttl/warsa graph — the camp LINKER's gazetteer shares its URI
-    // minting rule, so location links resolve into this graph.
+    // minting rule, so location links resolve into this graph. Like the
+    // schema and media graphs it reads no document: it is built on the
+    // driver as a local relation, and the stage runs one Spark job, the
+    // snapshot write.
     store.stage("camps", metrics = Seq("triples" -> count(lit(1)))) {
-      // localCheckpoint between the chain links: constructCamps references
-      // its input ~8 times and remintSubjects its input 4 times — left
-      // lazy, the raw→remint→remint chain (with its shuffles) re-executes
-      // MULTIPLICATIVELY under those references (measured: ~8 s warm on 96
-      // rows, pure job/shuffle overhead). The camp gazetteer is bounded at
-      // any corpus scale (a fixed camp registry, not per-document data),
-      // so local materialization is safe.
-      val raw = Gazetteers.rawCampTriples(spark)
-      val camps = CampConversion.remintSubjects(raw,
-        NS.SCHEMA_WARSA + "PowCamp", NS.SCHEMA_POW + "camp_id",
-        NS.SCHEMA_POW + "captivity_location", NS.DATA + "camp_")
-        .localCheckpoint()
-      val both = CampConversion.remintSubjects(camps,
-        NS.SCHEMA_WARSA + "PowHospital", NS.SCHEMA_POW + "camp_id",
-        NS.SCHEMA_POW + "captivity_location", NS.DATA + "hospital_")
-        .localCheckpoint()
-      CampConversion.constructCamps(both)
+      CampConversion.campGraph(Gazetteers.rawCampTriples(spark))
     }
 
     // -- 0b. schema graph (csv_to_rdf.py --outschema + schema_base.ttl) ---
@@ -128,8 +117,7 @@ object Pipeline {
 
     // -- 3b. media graph: magazine/person-document/video doc entities -----
     store.stage("media", metrics = Seq("triples" -> count(lit(1)))) {
-      magazines._2.unionByName(personDocs._2).unionByName(videos._2)
-        .transform(Triples.distinct)
+      Linkers.mediaGraph(magazines._2, personDocs._2, videos._2)
     }
 
     // -- 4. person record linkage (J9) ------------------------------------

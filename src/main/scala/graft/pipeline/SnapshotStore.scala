@@ -25,9 +25,11 @@ import org.apache.spark.sql.functions._
   * committed version; an interrupted write leaves no manifest and is
   * ignored/overwritten.
   *
-  * The manifest records row count, caller-supplied metrics (extraction /
-  * link rates), and per-partition-file lineage (file → rows) so a resumed
-  * run can verify inputs and a scheduler can re-derive any partition.
+  * The manifest records the row count, the caller's observed metrics
+  * (today only counts: `triples`, `links`, `errors`; data-quality rates are
+  * ROADMAP item 6) and per-partition-file lineage (file → rows) so a
+  * resumed run can verify inputs and a scheduler can re-derive any
+  * partition.
   */
 final class SnapshotStore(spark: SparkSession, workDir: String) {
 

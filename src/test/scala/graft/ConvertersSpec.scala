@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Date
+import java.time.LocalDate
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,8 +13,8 @@ import graft.functions._
 class ConvertersSpec extends AnyFunSuite {
 
   test("convert_dates (tests.py:27-32)") {
-    assert(Converters.convertDates("24.12.2016") == DateOrString(Date.valueOf("2016-12-24"), "24.12.2016"))
-    assert(Converters.convertDates("24/12/2016") == DateOrString(Date.valueOf("2016-12-24"), "24/12/2016"))
+    assert(Converters.convertDates("24.12.2016") == DateOrString(LocalDate.parse("2016-12-24"), "24.12.2016"))
+    assert(Converters.convertDates("24/12/2016") == DateOrString(LocalDate.parse("2016-12-24"), "24/12/2016"))
     assert(Converters.convertDates("xx.xx.xxxx").lexical == "xx.xx.xxxx")
     assert(Converters.convertDates("xx.09.2016").lexical == "xx.09.2016")
     // month out of range falls back to string (prisoner_2 katoamisaika)
@@ -60,7 +61,7 @@ class ConvertersSpec extends AnyFunSuite {
 
     val e = Parsers.readSemicolonSeparated("54 13.10.1942-xx.11.1942")
     assert(e.value == "54")
-    assert(e.dateBegin == DateOrString(Date.valueOf("1942-10-13"), "13.10.1942"))
+    assert(e.dateBegin == DateOrString(LocalDate.parse("1942-10-13"), "13.10.1942"))
     assert(!e.dateEnd.isDate && e.dateEnd.raw == "xx.11.1942")
     assert(e.errors.isEmpty)
   }
@@ -88,10 +89,10 @@ class ConvertersSpec extends AnyFunSuite {
 
   test("validators (validators.py)") {
     import java.time.LocalDate
-    assert(Validators.validateDates(DateOrString(Date.valueOf("1942-01-01"), "x")).isEmpty)
-    assert(Validators.validateDates(DateOrString(Date.valueOf("1938-01-01"), "x")).contains(
+    assert(Validators.validateDates(DateOrString(LocalDate.parse("1942-01-01"), "x")).isEmpty)
+    assert(Validators.validateDates(DateOrString(LocalDate.parse("1938-01-01"), "x")).contains(
       "Päivämäärä 1938-01-01 liian varhainen (< 1939-11-28)"))
-    assert(Validators.validateDates(DateOrString(Date.valueOf("1946-01-01"), "x")).contains(
+    assert(Validators.validateDates(DateOrString(LocalDate.parse("1946-01-01"), "x")).contains(
       "Päivämäärä 1946-01-01 liian myöhäinen (> 1945-04-25)"))
     assert(Validators.validateDates(DateOrString(null, "xx.7.1944")).isEmpty)
     assert(Validators.validateDates(DateOrString(null, "garbage")).contains("Päivämäärä ei ole kelvollinen"))
@@ -101,7 +102,7 @@ class ConvertersSpec extends AnyFunSuite {
     assert(Validators.validateMotherTongue("").isEmpty)
     assert(Validators.validateMotherTongue("epäselvä").contains("Epäselvä arvo"))
     // before-override used by semicolon date ranges (csv_to_rdf.py:103)
-    assert(Validators.validateDates(DateOrString(Date.valueOf("1950-01-01"), "x"),
+    assert(Validators.validateDates(DateOrString(LocalDate.parse("1950-01-01"), "x"),
       before = LocalDate.of(1960, 1, 1)).isEmpty)
   }
 

@@ -71,7 +71,7 @@ class PropertySpec extends AnyFunSuite {
       (d, m, y) =>
         val r = Converters.convertDates(s"$d.$m.$y")
         assert(r.isDate)
-        assert(r.date.toLocalDate == java.time.LocalDate.of(y, m, d))
+        assert(r.date == java.time.LocalDate.of(y, m, d))
         val slash = Converters.convertDates(s"$d/$m/$y")
         assert(slash.date == r.date)
     }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
@@ -19,5 +23,36 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The Spark jobs `body` starts on the calling thread, counted by a
+    * listener that matches a local property. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (key, marker) = ("graft.spec.jobs", "marker")
+    val jobs = new AtomicInteger()
+    val seenMarker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("body") => jobs.incrementAndGet()
+          case Some(`marker`) => seenMarker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      body
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the body has been counted
+      sc.setLocalProperty(key, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(seenMarker.await(60, TimeUnit.SECONDS), "listener bus stalled")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
   }
 }
