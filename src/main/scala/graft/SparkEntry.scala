@@ -869,9 +869,9 @@ object SparkEntry {
     }),
   )
 
-  /** The golden triple set as a DuckDB VALUES oracle: canonical NT lines
-    * parsed from the reference's test_data/prisoners.ttl (generated by
-    * graft.tools.DumpGoldenNt into resources; single quotes SQL-doubled).
+  /** The golden triple set as a DuckDB VALUES oracle: the canonical NT
+    * lines of the reference's test_data/prisoners.ttl, vendored as the
+    * `golden_prisoners.nt` resource (single quotes SQL-doubled).
     * Turns the P/R anchor into a hash-exact row in the correctness gate. */
   private def goldenFixtureSql: Option[String] =
     Option(getClass.getResourceAsStream("/golden_prisoners.nt")).map { in =>

@@ -54,6 +54,17 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
 
   def exists(stage: String): Boolean = latestVersion(stage).isDefined
 
+  /** The stages with a committed snapshot, in commit order: by the
+    * modification time of each stage's latest manifest. */
+  def committedStages: Seq[String] = {
+    val root = new Path(workDir)
+    if (!fs.exists(root)) return Nil
+    fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .flatMap(st => latestVersion(st).map(v => (fs.getFileStatus(manifestPath(st, v))
+        .getModificationTime, st)))
+      .sorted.map(_._2)
+  }
+
   def read(stage: String): DataFrame = {
     val v = latestVersion(stage).getOrElse(
       sys.error(s"no committed snapshot for stage '$stage' under $workDir"))

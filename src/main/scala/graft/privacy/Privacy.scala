@@ -2,7 +2,7 @@ package graft.privacy
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Converters
@@ -16,12 +16,12 @@ import graft.model.{NS, Triples}
   * the reference's own test asserts subject-set preservation
   * (src/tests.py:117-129).
   *
-  * Spark shape: classification is one aggregation over the type and date
-  * triples; removal is `left_anti` against the (subject, predicate[,
-  * reification]) hide-set; additions are small unions. The reification
-  * cascade (remove a triple ⇒ remove its 5 reification triples,
-  * prune_nonpublic.py:65-78) is a join from hidden (s,p) pairs to
-  * reification subjects.
+  * Spark shape: one pass per subject. One aggregation over the type,
+  * date, family-name, captivity and reification rows gives each subject's
+  * class inputs and object sets; the non-public persons, with the common
+  * names as one array row, yield one hide frame (subject, hidden
+  * predicates, or all of a reification node's triples), removed by one
+  * `left_anti`, and one `explode` of their replacement and flag triples.
   */
 object Privacy {
 
@@ -52,44 +52,48 @@ object Privacy {
     NS.SCHEMA_POW + "finnish_return_interrogation_file",
     NS.SCHEMA_POW + "recording")
 
-  /** Person classification (prune_nonpublic.py:194-215).
-    * Returns (subj, cls) with cls ∈ {public, died_recently, possibly_alive}
-    * for every non-null PrisonerRecord subject.
+  private val death = NS.SCHEMA_POW + "date_of_death"
+  private val birth = NS.SCHEMA_WARSA + "date_of_birth"
+  private val familyName = NS.SCHEMA_WARSA + "family_name"
+  private val captivity = NS.SCHEMA_POW + "captivity"
+  private def isPerson: Column =
+    col("pred") === NS.RDF_TYPE && col("objValue") === (NS.SCHEMA_WARSA + "PrisonerRecord")
+
+  /** One row per non-null subject of `rows`: whether it is a
+    * PrisonerRecord and the dates the class rule reads, then `extra`. */
+  private def perSubject(rows: DataFrame, extra: Column*): DataFrame = {
+    val (pred, d) = (col("pred"), col("d"))
+    val aggs = Seq(
+      max(isPerson).as("person"),
+      max(when(pred === death, d)).as("latest_death"), // latest (prune_nonpublic.py:204)
+      max(when(pred === death, when(d.isNull, 1).otherwise(0))).as("death_without_date"),
+      min(when(pred === birth, d)).as("dob")) ++ extra
+    rows.filter(col("subj").isNotNull)
+      .withColumn("d", when(pred.isin(death, birth), castDateUdf(col("objValue"))))
+      .groupBy("subj").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The class rule over [[perSubject]]'s columns (prune_nonpublic.py:194-215). */
+  private def personClass(today: LocalDate): Column = {
+    val cutoff = java.sql.Date.valueOf(today.minusYears(50))
+    val aliveDob = java.sql.Date.valueOf(LocalDate.of(1910, 9, 30))
+    val (latest, undated, dob) = (col("latest_death"), col("death_without_date"), col("dob"))
+    when((latest.isNotNull && latest >= lit(cutoff)) || undated === 1, "died_recently")
+      .when(latest.isNull && (undated.isNull || undated === 0) &&
+            dob.isNotNull && dob >= lit(aliveDob), "possibly_alive")
+      .otherwise("public").as("cls")
+  }
+
+  /** Person classification: one aggregation over the type and date
+    * triples. Returns (subj, cls) with cls ∈ {public, died_recently,
+    * possibly_alive} for every non-null PrisonerRecord subject.
     * `today` has NO default on purpose: the cutoff is a run input that must
     * come from the pipeline's pinned run date (SnapshotStore.pinRunDate) —
     * a wall-clock default would make a resume across midnight classify
     * differently than the run it resumes. */
-  def classify(triples: DataFrame, today: LocalDate): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val cutoff = java.sql.Date.valueOf(today.minusYears(50))
-    val aliveDob = java.sql.Date.valueOf(LocalDate.of(1910, 9, 30))
-
-    // one pass per person: the type and date triples fold into one row
-    // per subject; subjects without a PrisonerRecord type row drop out.
-    // The explicit non-null subject is the filter every join consumer
-    // infers anyway: with it, all consumers plan the same shuffle, which
-    // AQE then computes once and reuses.
-    val death = NS.SCHEMA_POW + "date_of_death"
-    val birth = NS.SCHEMA_WARSA + "date_of_birth"
-    val isPerson = $"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord")
-    triples.filter((isPerson || $"pred".isin(death, birth)) && $"subj".isNotNull)
-      .select($"subj", $"pred", isPerson.as("person"),
-        when($"pred".isin(death, birth), castDateUdf($"objValue")).as("d"))
-      .groupBy($"subj").agg(
-        max($"person").as("person"),
-        max(when($"pred" === death, $"d")).as("latest_death"), // latest (prune_nonpublic.py:204)
-        max(when($"pred" === death, when($"d".isNull, 1).otherwise(0))).as("death_without_date"),
-        min(when($"pred" === birth, $"d")).as("dob"))
-      .filter($"person")
-      .select($"subj",
-        when(($"latest_death".isNotNull && $"latest_death" >= lit(cutoff)) ||
-             $"death_without_date" === 1, "died_recently")
-          .when($"latest_death".isNull &&
-                ($"death_without_date".isNull || $"death_without_date" === 0) &&
-                $"dob".isNotNull && $"dob" >= lit(aliveDob), "possibly_alive")
-          .otherwise("public").as("cls"))
-  }
+  def classify(triples: DataFrame, today: LocalDate): DataFrame =
+    perSubject(triples.filter(isPerson || col("pred").isin(death, birth)))
+      .filter(col("person")).select(col("subj"), personClass(today))
 
   /** Common family names: endpoint count >= 2 AND endpoint+local >= 4
     * (prune_nonpublic.py:149-175). `endpointNames` plays the WarSampo
@@ -97,7 +101,7 @@ object Privacy {
   def commonNames(triples: DataFrame, endpointNames: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val local = triples.filter($"pred" === (NS.SCHEMA_WARSA + "family_name"))
+    val local = triples.filter($"pred" === familyName)
       .groupBy($"objValue".as("family")).agg(count(lit(1)).as("n_local"))
     endpointNames.filter($"count" >= 2)
       .join(local, $"family" === $"fam", "left")
@@ -112,112 +116,74 @@ object Privacy {
                    today: LocalDate): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
+    val none = typedLit(Seq.empty[String])
+    // collect_set skips nulls; a struct keeps a null object, which the
+    // rule treats as an uncommon name or a captivity resource like any other
+    def objects(p: String, name: String) =
+      collect_set(when($"pred" === p, struct($"objValue".as("o")))).as(name)
 
-    // The classification, common-name and family-name frames are each
-    // consumed by several of the joins below. They are left lazy: within
-    // the one pruning query AQE plans each repeated subtree's shuffle once
-    // and reuses it (`ReusedExchange`), so sharing costs no cache — a
-    // persist would add a cache-materialization job per frame and pin
-    // executor storage after the stage commits.
-    val cls = classify(triples, today)
-    val hidden = cls.filter($"cls" =!= "public") // health hidden for both
-    val alive = cls.filter($"cls" === "possibly_alive")
-    val common = commonNames(triples, endpointNames)
+    val subjects = perSubject(
+      triples.filter(isPerson ||
+        $"pred".isin(death, birth, familyName, captivity, NS.RDF_SUBJECT, NS.RDF_PREDICATE)),
+      objects(familyName, "families"), objects(captivity, "captivities"),
+      collect_set(when($"pred" === NS.RDF_SUBJECT, $"objValue")).as("rs"),
+      collect_set(when($"pred" === NS.RDF_PREDICATE, $"objValue")).as("rp"))
 
-    // family names of possibly-alive records, flagged common/uncommon
-    val aliveFamily = triples.filter($"pred" === (NS.SCHEMA_WARSA + "family_name"))
-      .join(alive.select("subj"), Seq("subj"))
-      .join(common.withColumn("is_common", lit(true)),
-        $"objValue" === $"family", "left")
-      .select($"subj", $"objValue".as("family"),
-        coalesce($"is_common", lit(false)).as("is_common"))
+    // the non-public persons; family names and captivities count only for
+    // the possibly alive. `common` is the common-name set, one array row.
+    def isCommon(family: Column) = coalesce(array_contains($"common", family), lit(false))
+    val persons = subjects.filter($"person")
+      .select($"subj", personClass(today), $"families", $"captivities")
+      .filter($"cls" =!= "public")
+      .crossJoin(commonNames(triples, endpointNames).agg(collect_set($"family").as("common")))
+      .withColumn("alive", $"cls" === "possibly_alive")
+      .withColumn("names", when($"alive", transform($"families", _("o"))).otherwise(none))
+      .withColumn("capts", when($"alive", transform($"captivities", _("o"))).otherwise(none))
+      .withColumn("uncommon", exists($"names", !isCommon(_)))
+      .withColumn("common_names", filter($"names", isCommon(_)))
+      .withColumn("hpreds", concat(typedLit(healthPreds),
+        when($"alive", typedLit(personalPreds)).otherwise(none),
+        when($"uncommon", array(lit(familyName))).otherwise(none)))
 
-    // ---- build the hide-set of (subj, pred) pairs ------------------------
-    val hideHealth = hidden.select($"subj")
-      .crossJoin(spark.createDataset(healthPreds).toDF("hpred"))
-    val hidePersonal = alive.select($"subj")
-      .crossJoin(spark.createDataset(personalPreds).toDF("hpred"))
-    val hideFamily = aliveFamily.filter(!$"is_common")
-      .select($"subj", lit(NS.SCHEMA_WARSA + "family_name").as("hpred"))
-    val hideSet = hideHealth.unionByName(hidePersonal).unionByName(hideFamily).distinct()
+    // ---- one hide frame (hsubj, hpreds, all) -----------------------------
+    // each person's own hidden predicates (position 0), then the labels of
+    // its captivity resources
+    val personHides = persons.select(posexplode(concat(
+        array(struct($"subj".as("hsubj"), $"hpreds")),
+        transform($"capts", c => struct(c.as("hsubj"), array(lit(NS.SKOS_PREF_LABEL)).as("hpreds"))))))
+      .select($"pos", $"col.*")
+    // the reification cascade: a person's own hidden (s, p) removes every
+    // reification node with rdf:subject s and rdf:predicate p, all of its
+    // triples (prune_nonpublic.py:65-78)
+    val reifHides = subjects.select($"subj".as("reif"), explode($"rs").as("hsubj"), $"rp")
+      .join(personHides.filter($"pos" === 0), "hsubj")
+      .filter(exists($"rp", array_contains($"hpreds", _)))
+      .select($"reif".as("hsubj"), none.as("hpreds"), lit(true).as("all"))
+    val hides = personHides.select($"hsubj", $"hpreds", lit(false).as("all")).unionByName(reifHides)
+    val kept = triples.join(hides,
+      $"subj" === $"hsubj" && ($"all" || array_contains($"hpreds", $"pred")), "left_anti")
 
-    // captivity label redaction: labels of captivity resources of alive recs
-    val captivityOf = triples.filter($"pred" === (NS.SCHEMA_POW + "captivity"))
-      .select($"subj", $"objValue".as("captivity"))
-      .join(alive.select("subj"), Seq("subj"))
-
-    val hideCaptivityLabels = captivityOf
-      .select($"captivity".as("subj"), lit(NS.SKOS_PREF_LABEL).as("hpred")).distinct()
-
-    val allHides = hideSet.unionByName(hideCaptivityLabels)
-
-    // ---- reification cascade --------------------------------------------
-    // a hidden (s,p) removes any reification whose rdf:subject=s ∧
-    // rdf:predicate=p, with all 5 of its triples
-    val reifSubj = triples.filter($"pred" === NS.RDF_SUBJECT)
-      .select($"subj".as("reif"), $"objValue".as("rs"))
-    val reifPred = triples.filter($"pred" === NS.RDF_PREDICATE)
-      .select($"subj".as("reif"), $"objValue".as("rp"))
-    val hiddenReifs = reifSubj.join(reifPred, "reif")
-      .join(hideSet, $"rs" === $"subj" && $"rp" === $"hpred")
-      .select($"reif").distinct()
-
-    // ---- apply -----------------------------------------------------------
-    // explicit renames: both sides derive from `triples`, so positional
-    // column references would resolve to the same attribute (self-join
-    // ambiguity -> trivially-true predicate)
-    val hides2 = allHides.select(col("subj").as("hsubj"), col("hpred"))
-    val kept = triples
-      .join(hides2, triples("subj") === hides2("hsubj") &&
-        triples("pred") === hides2("hpred"), "left_anti")
-      .join(hiddenReifs, triples("subj") === hiddenReifs("reif"), "left_anti")
-
-    // ---- replacement triples --------------------------------------------
-    kept.toDF()
-      .unionByName(replacements(aliveFamily, captivityOf, common))
-      .unionByName(flags(hidden, alive))
-      .transform(Triples.distinct)
-  }
-
-  // replacement label triples (prune_nonpublic.py:118-141)
-  private def replacements(aliveFamily: DataFrame, captivityOf: DataFrame,
-                           common: DataFrame): DataFrame = {
-    val spark = aliveFamily.sparkSession
-    import spark.implicits._
+    // ---- replacement labels (prune_nonpublic.py:118-141) and the
+    // hide_documents / personal_information_removed flags (:222,144) -------
+    def label(s: Column, o: Column) = Triples.struct(Triples.literal(s, lit(NS.SKOS_PREF_LABEL), o))
+    def flag(p: String) = Triples.struct(Triples.literal($"subj", lit(NS.SCHEMA_POW + p),
+      lit("true"), datatype = lit(NS.XSD_BOOLEAN)))
     val restricted = lit("Nimi rajoitettu")
-    val label = lit(NS.SKOS_PREF_LABEL)
+    val anonymous = $"uncommon" || size($"names") === 0
+    val personRows = array(flag("hide_documents"),
+      when($"alive", flag("personal_information_removed")),
+      when($"uncommon", Triples.struct(Triples.literal($"subj", lit(familyName), restricted))),
+      when($"uncommon", label($"subj", restricted)))
+    val captivityRows = flatten(transform($"capts", c => concat(
+      array(when(anonymous, label(c, lit("Henkilön sotavankeus"))),
+        when(anonymous, label(c, lit("Person's captivity")))),
+      flatten(transform($"common_names", f => array(
+        label(c, concat(lit("Henkilön "), f, lit(" sotavankeus"))),
+        label(c, concat(lit("Person's "), f, lit(" captivity")))))))))
+    val added = persons.select(explode(concat(personRows,
+        transform($"common_names", label($"subj", _)), captivityRows)).as("t"))
+      .filter($"t".isNotNull).select("t.*")
 
-    val uncommon = aliveFamily.filter(!$"is_common").select($"subj").distinct()
-    val commonRecs = aliveFamily.filter($"is_common")
-
-    val nameRows =
-      uncommon.select(Triples.literal($"subj", lit(NS.SCHEMA_WARSA + "family_name"), restricted): _*)
-        .unionByName(uncommon.select(Triples.literal($"subj", label, restricted): _*))
-        .unionByName(commonRecs.select(Triples.literal($"subj", label, $"family"): _*))
-
-    val capt = captivityOf
-      .join(aliveFamily.select($"subj", $"family", $"is_common"), Seq("subj"), "left")
-    val uncommonCapt = capt.filter(!coalesce($"is_common", lit(false)))
-    val commonCapt = capt.filter(coalesce($"is_common", lit(false)))
-    val captRows =
-      uncommonCapt.select(Triples.literal($"captivity", label, lit("Henkilön sotavankeus")): _*)
-        .unionByName(uncommonCapt.select(
-          Triples.literal($"captivity", label, lit("Person's captivity")): _*))
-        .unionByName(commonCapt.select(Triples.literal($"captivity", label,
-          concat(lit("Henkilön "), $"family", lit(" sotavankeus"))): _*))
-        .unionByName(commonCapt.select(Triples.literal($"captivity", label,
-          concat(lit("Person's "), $"family", lit(" captivity"))): _*))
-
-    nameRows.unionByName(captRows).distinct()
-  }
-
-  // hide_documents / personal_information_removed flags
-  // (prune_nonpublic.py:222,144)
-  private def flags(hidden: DataFrame, alive: DataFrame): DataFrame = {
-    val (subj, yes, boolean) = (col("subj"), lit("true"), lit(NS.XSD_BOOLEAN))
-    hidden.select(Triples.literal(subj, lit(NS.SCHEMA_POW + "hide_documents"), yes,
-        datatype = boolean): _*)
-      .unionByName(alive.select(Triples.literal(subj,
-        lit(NS.SCHEMA_POW + "personal_information_removed"), yes, datatype = boolean): _*))
+    kept.unionByName(added).transform(Triples.distinct)
   }
 }

@@ -1,12 +1,10 @@
 package graft.tools
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
 import graft.extract.{DocIngest, Extraction}
-import graft.rdf.Turtle
 
 /** CLI sink: prisoners CSV → canonical sorted N-Triples dump
   * (the reference's `csv_to_rdf.py PRISONERS in.csv --outdata out.ttl`
@@ -29,7 +27,7 @@ object DumpTriples {
     val triples = Extraction.triples(docs).collect().toSeq
     val errors = Extraction.errors(docs).collect().toSeq
 
-    Files.writeString(Paths.get(outPath), Turtle.toNTriples(triples))
+    Files.writeString(Paths.get(outPath), triples.map(_.key).sorted.mkString("", "\n", "\n"))
     println(s"docs=${docs.count()} triples=${triples.size} errors=${errors.size} -> $outPath")
     errors.foreach(e => println(s"[error] doc=${e.docId} col='${e.column}' ${e.error} :: ${e.value.take(60)}"))
     spark.stop()

@@ -8,16 +8,19 @@ import graft.pipeline.{Pipeline, SnapshotStore}
 /** spark-submit entrypoint for the full KG pipeline:
   * `runMain graft.tools.RunPipeline [sfDir] [workDir]` (default: the
   * vendored corpus `perfbench/data`) — runs (or resumes)
-  * every stage, prints per-stage manifests and the final triple count. */
+  * every stage, prints the manifest of each committed stage in commit order
+  * and the final triple count. Runs at `local[nproc]`, or at the master
+  * `SPARK_MASTER` names, with 2 × nproc shuffle partitions. */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else SynthDocs.corpusDir
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val replicate = if (args.length > 2) args(2).toInt else 1
+    val cores = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
       .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "16")
+      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -37,9 +40,7 @@ object RunPipeline {
     val sec = (System.nanoTime() - t0) / 1e9
 
     val store = new SnapshotStore(spark, workDir)
-    Seq("camps", "schema", "extract", "extract_errors", "pruned", "linked",
-      "media", "person_links", "sourced", "canonical", "record_frame",
-      "events", "final").foreach { st =>
+    store.committedStages.foreach { st =>
       val m = store.readManifest(st)
       val rows = "\"rows\": (\\d+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("?")
       val sec = "\"sec\": ([0-9.]+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("?")

@@ -4,11 +4,6 @@ import java.time.LocalDate
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 import graft.erlink.RecordLinkage
@@ -29,6 +24,7 @@ import graft.privacy.Privacy
 class OnePassEquivalenceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
+  import SparkTestBase.assertSameRows
   import spark.implicits._
 
   private val today = LocalDate.of(2026, 1, 1)
@@ -191,15 +187,7 @@ class OnePassEquivalenceSpec extends AnyFunSuite {
     closure
   }
 
-  // ---- comparison ---------------------------------------------------------
-
-  /** Columns and the multiset of rows, order-free. */
-  private def assertSameRows(actual: DataFrame, expected: DataFrame, what: String): Unit = {
-    assert(actual.columns.toSeq == expected.columns.toSeq, s"$what: columns differ")
-    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    val (a, e) = (rows(actual), rows(expected))
-    assert(a == e, s"$what: ${a.diff(e).take(5)} not expected; ${e.diff(a).take(5)} missing")
-  }
+  // ---- fixtures -----------------------------------------------------------
 
   private def t(s: String, p: String, o: String, uri: Boolean = false,
                 dt: String = null, doc: String = null) =
@@ -295,39 +283,6 @@ class OnePassEquivalenceSpec extends AnyFunSuite {
     assert(cls == Map("nodates" -> "public", "recent" -> "died_recently", "old" -> "public",
       "undated" -> "died_recently", "young" -> "public", "young2" -> "possibly_alive",
       "twice" -> "possibly_alive", "flagged" -> "possibly_alive"))
-  }
-
-  test("pruning plans the classification shuffle once and reuses it") {
-    // over a parquet snapshot, as the pipeline's pruning stage reads it (a
-    // cached input would give each consumer its own cache query stage)
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").resolve("extract").toString
-    corpus.write.parquet(dir)
-    val pruned = Privacy.prunePersons(spark.read.parquet(dir),
-      Gazetteers.casualtiesNameCounts(spark), today)
-    pruned.queryExecution.toRdd.count()
-    val plan = pruned.queryExecution.executedPlan
-    // an exchange over the classification's partial aggregate
-    def isClassify(e: SparkPlan) = (e.children.head match {
-      case w: WholeStageCodegenExec => w.child
-      case c => c
-    }) match {
-      case a: HashAggregateExec => a.aggregateExpressions.exists(_.toString.contains("max(person"))
-      case _ => false
-    }
-    // the final plan's nodes, a reused exchange as one leaf
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case _: ReusedExchangeExec => Nil
-      case _ => p.children.flatMap(nodes)
-    })
-    val all = nodes(plan)
-    val shuffles = all.collect { case e: ShuffleExchangeExec if isClassify(e) => e }
-    val reuses = all.collect { case r: ReusedExchangeExec if isClassify(r.child) => r }
-    assert(shuffles.size == 1 && reuses.nonEmpty,
-      s"classification shuffle planned ${shuffles.size}x, reused ${reuses.size}x: " +
-        (shuffles ++ reuses).map(_.simpleString(4)).mkString("\n"))
-    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]), "pruning should not cache")
   }
 
   // ---- dictionary linking -----------------------------------------------------

@@ -154,8 +154,7 @@ class OpsSpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"${SparkTestBase.corpusDir}/embeddings.parquet")
       .select("vec_id", "embedding")
     val (centroids, indexed) = Similarity.ivfIndex(emb, k = 16, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    try {
+    SparkTestBase.withTempDir("ivf_idx") { dir =>
       val persisted = Similarity.writeIvfIndex(indexed, dir)
       val res = Similarity.cosineTopKIvf(centroids, persisted,
         emb.filter($"vec_id" === 0), k = 3, nprobe = 4)
@@ -172,8 +171,6 @@ class OpsSpec extends AnyFunSuite {
         emb.filter($"vec_id" === 0), k = 3, nprobe = 4)
       assert(res.collect().map(_.toString).sorted
         .sameElements(mem.collect().map(_.toString).sorted))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 

@@ -4,7 +4,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.Assertions.assert
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestBase {
@@ -23,6 +24,21 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Equal columns and the same multiset of rows, order-free. */
+  def assertSameRows(actual: DataFrame, expected: DataFrame, what: String): Unit = {
+    assert(actual.columns.toSeq == expected.columns.toSeq, s"$what: columns differ")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val (a, e) = (rows(actual), rows(expected))
+    assert(a == e, s"$what: ${a.diff(e).take(5)} not expected; ${e.diff(a).take(5)} missing")
+  }
+
+  /** Runs `body` on a fresh temporary directory and deletes the directory
+    * afterwards, whether `body` succeeds or not. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
   /** The Spark jobs `body` starts on the calling thread, counted by a

@@ -16,17 +16,11 @@ import graft.pipeline.SnapshotStore
 class StaticGraphsEquivalenceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
+  import SparkTestBase.assertSameRows
   import spark.implicits._
 
   private val (pow, camp, hospital) =
     (NS.SCHEMA_POW, NS.SCHEMA_WARSA + "PowCamp", NS.SCHEMA_WARSA + "PowHospital")
-
-  private def assertSameRows(actual: DataFrame, expected: DataFrame, what: String): Unit = {
-    assert(actual.columns.toSeq == expected.columns.toSeq, s"$what: columns differ")
-    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    val (a, e) = (rows(actual), rows(expected))
-    assert(a == e, s"$what: ${a.diff(e).take(5)} not expected; ${e.diff(a).take(5)} missing")
-  }
 
   private def tdf(rows: (String, String, String, Boolean)*): DataFrame =
     rows.map { case (s, p, o, u) => (s, p, o, u, null: String, null: String, "") }
@@ -198,13 +192,12 @@ class StaticGraphsEquivalenceSpec extends AnyFunSuite {
           Linkers.linkVideos(Gazetteers.videoIndex(spark), Gazetteers.videoLabels(spark))._2))
     }
     assert(built == 0, s"building the static frames ran $built Spark jobs")
-    val dir = java.nio.file.Files.createTempDirectory("graft_static").toFile
-    try {
-      val store = new SnapshotStore(spark, dir.toString)
+    SparkTestBase.withTempDir("graft_static") { dir =>
+      val store = new SnapshotStore(spark, dir)
       for ((stage, df) <- frames) {
         val n = SparkTestBase.jobsOf(store.write(stage, df))
         assert(n == 1, s"writing the $stage stage ran $n Spark jobs")
       }
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 }
