@@ -11,6 +11,7 @@ import graft.gazetteer.Gazetteers
 import graft.link.Linkers
 import graft.model.{NS, Triples}
 import graft.privacy.Privacy
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The full KG-construction pipeline: extract → prune → link → er-link →
   * canonicalize → materialize events → final predicate-partitioned store.
@@ -31,6 +32,26 @@ import graft.privacy.Privacy
   * join broadcasts; the only wide exchanges are the triple-set dedup, the
   * ER candidate join (salted), connected components (iterative), and the
   * final `partitionBy(pred_key)` write.
+  *
+  * Codegen only where it pays. A cold run on a small input is mostly a
+  * compile run: with codegen in every stage a 500-document run compiles
+  * about 520 Janino classes at about 30 ms each, while the data would take
+  * the interpreted operators a few seconds. Generated code wins back its
+  * compile time only on enough rows per task slot (the compile is paid
+  * about once per plan, the per-row saving on every slot). So the run
+  * plans in two sessions:
+  *  - the caller's, for `extract` and `extract_errors`: their cost is the
+  *    per-document span dispatch, whatever the input size;
+  *  - a private clone of it with codegen off ([[Bridge.withoutCodegen]]),
+  *    for the `camps`, `schema` and `media` graphs, whose size the
+  *    vendored gazetteers bound, and for every stage from `pruned` on when
+  *    the committed `extract` snapshot holds fewer than
+  *    [[InterpretedRowsPerSlot]] triples per task slot. The count is read
+  *    from the manifest (no Spark job), so a resumed run decides as the
+  *    fresh run did.
+  * The caller's session is never changed, its query-execution listeners
+  * see every stage write (the clone copies them), and the result is
+  * returned as a frame of the caller's session.
   */
 object Pipeline {
 
@@ -39,6 +60,36 @@ object Pipeline {
   def withPredKey(df: DataFrame): DataFrame =
     df.withColumn("pred_key", regexp_replace(
       regexp_extract(col("pred"), "([^/#]+)[/#]?$", 1), "[^A-Za-z0-9_.-]", "_"))
+
+  /** Extracted triples per task slot below which the stages from `pruned`
+    * on plan without codegen. Cold `Pipeline.run` seconds, interpreted vs
+    * codegen from `pruned` on (static stages interpreted in both), on a
+    * 4-core 16 GB host, 4 GB heap, 2 × slots shuffle partitions, runs
+    * interleaved, each pair with equal final digests:
+    * {{{
+    *  replicas  extract rows  slots  rows/slot  interpreted          codegen
+    *   20          301,111      4     75,278    48.3 42.9 44.2       48.9 46.9 56.6
+    *   30          451,666      4    112,917    48.6 47.0 48.7       54.5 48.4 51.5
+    *   40          602,221      4    150,555    74.5 55.7 51.6       74.4 56.4 58.1
+    *   60          903,332      4    225,833    81.9 66.5 67.0       72.9 70.7 66.5
+    *  100        1,505,556      4    376,389    84.5 84.8 82.2       80.3 84.5 74.7
+    *   20          301,111      2    150,556    49.8 45.1            49.8 50.8
+    *   30          451,666      2    225,833    53.1 60.8 65.5 54.7  54.2 54.8 52.4 56.8
+    *   40          602,221      2    301,111    60.4 54.4            56.5 55.4
+    * }}}
+    * (A replica is 500 `SynthDocs` documents.)
+    * Interpreted wins clearly up to 30 replicas at local[4] and stops
+    * winning between 20 and 30 at local[2]: the crossover moves with the
+    * slot count (a compile is paid about once per plan, the interpreted
+    * per-row cost spreads over the slots), so the constant is per slot,
+    * just above the 30-replica point. */
+  val InterpretedRowsPerSlot: Long = 120000L
+
+  /** Whether a run whose `extract` snapshot holds `extractRows` triples,
+    * on `slots` task slots, plans its stages from `pruned` on in the
+    * interpreted session. */
+  def plansInterpreted(extractRows: Long, slots: Int): Boolean =
+    extractRows / math.max(1, slots) < InterpretedRowsPerSlot
 
   /** `requestedToday` is the privacy-cutoff reference date; the EFFECTIVE
     * date is pinned per workDir on first run (`SnapshotStore.pinRunDate`),
@@ -51,8 +102,17 @@ object Pipeline {
   def run(spark: SparkSession, docs: DataFrame, workDir: String,
           requestedToday: java.time.LocalDate): DataFrame = {
     import spark.implicits._
-    val store = new SnapshotStore(spark, workDir)
-    val today = store.pinRunDate(requestedToday)
+    val interpreted = Bridge.withoutCodegen(spark)
+    val callerStore = new SnapshotStore(spark, workDir)
+    val today = callerStore.pinRunDate(requestedToday)
+
+    // a bounded static graph: planned in the interpreted session and
+    // written as one file (a local relation scans as up to
+    // defaultParallelism partitions; coalesce adds no shuffle and no job)
+    def staticGraph(name: String)(graph: => DataFrame): Unit =
+      callerStore.stage(name, metrics = Seq("triples" -> count(lit(1)))) {
+        Bridge.rooted(interpreted, graph).coalesce(1)
+      }
 
     // -- 0. camps & hospitals conversion (process.sh:20-23; convert.sh
     // camps flow): raw row-numbered triples -> E19 re-mint under the
@@ -63,60 +123,68 @@ object Pipeline {
     // schema and media graphs it reads no document: it is built on the
     // driver as a local relation, and the stage runs one Spark job, the
     // snapshot write.
-    store.stage("camps", metrics = Seq("triples" -> count(lit(1)))) {
-      CampConversion.campGraph(Gazetteers.rawCampTriples(spark))
+    staticGraph("camps") {
+      CampConversion.campGraph(Gazetteers.rawCampTriples(interpreted))
     }
 
     // -- 0b. schema graph (csv_to_rdf.py --outschema + schema_base.ttl) ---
-    store.stage("schema", metrics = Seq("triples" -> count(lit(1)))) {
-      Extraction.schemaTriples(spark).toDF()
+    staticGraph("schema") {
+      Extraction.schemaTriples(interpreted).toDF()
     }
 
-    // -- 1. extraction ----------------------------------------------------
-    val extracted = store.stage("extract",
+    // -- 1. extraction, in the caller's session: the rule below keys on
+    // its output size, and its own plans compile few classes (about 24) --
+    val extracted = callerStore.stage("extract",
       metrics = Seq("triples" -> count(lit(1))), sortCols = Seq("pred")) {
       Extraction.triples(docs).toDF()
     }
-    store.stage("extract_errors",
+    callerStore.stage("extract_errors",
       metrics = Seq("errors" -> count(lit(1)))) {
       Extraction.errors(docs).toDF()
     }
+
+    // every later stage plans in `s`: the interpreted session below the
+    // crossover, decided from the committed manifest, so that a resumed
+    // run decides as the fresh run did
+    val s = if (plansInterpreted(callerStore.rows("extract"),
+      spark.sparkContext.defaultParallelism)) interpreted else spark
+    val store = new SnapshotStore(s, workDir)
 
     // -- 2. privacy pruning (process.sh:25-28 runs before linking); the
     // casualties name-count gazetteer plays the WarSampo SPARQL role in
     // the common-name rule (prune_nonpublic.py:149-175)
     val pruned = store.stage("pruned", sortCols = Seq("pred")) {
-      Privacy.prunePersons(extracted, Gazetteers.casualtiesNameCounts(spark), today)
+      Privacy.prunePersons(Bridge.rooted(s, extracted), Gazetteers.casualtiesNameCounts(s), today)
     }
 
     // -- 3. linking (process.sh:30-96) ------------------------------------
     // media linkers return (links, media-doc entities): links join the
     // prisoners graph (…_links.ttl files), entities go to the separate
     // media stage below (prisoners_media.ttl, process.sh:126-128)
-    val magazines = Linkers.linkMagazines(pruned, Gazetteers.magazineIndex(spark))
-    val personDocs = Linkers.linkPersonDocuments(Gazetteers.personDocumentPaths(spark))
-    val videos = Linkers.linkVideos(Gazetteers.videoIndex(spark), Gazetteers.videoLabels(spark))
+    val magazines = Linkers.linkMagazines(pruned, Gazetteers.magazineIndex(s))
+    val personDocs = Linkers.linkPersonDocuments(Gazetteers.personDocumentPaths(s))
+    val videos = Linkers.linkVideos(Gazetteers.videoIndex(s), Gazetteers.videoLabels(s))
     val linked = store.stage("linked", metrics = Seq("links" -> count(lit(1)))) {
       val periods = Linkers.docPeriods(pruned)
-      val dictionaries = Seq(Linkers.rankTask(Gazetteers.ranks(spark)),
-        Linkers.campTask(Gazetteers.camps(spark))) ++
-        Linkers.municipalityTasks(Gazetteers.municipalities(spark)) :+
-        Linkers.pnrDeathTask(Gazetteers.pnrPlaces(spark))
+      val dictionaries = Seq(Linkers.rankTask(Gazetteers.ranks(s)),
+        Linkers.campTask(Gazetteers.camps(s))) ++
+        Linkers.municipalityTasks(Gazetteers.municipalities(s)) :+
+        Linkers.pnrDeathTask(Gazetteers.pnrPlaces(s))
       val links =
         Linkers.linkDictionary(pruned, dictionaries)
-          .unionByName(Linkers.linkOccupations(pruned, Gazetteers.occupations(spark)))
-          .unionByName(Linkers.linkUnits(pruned, Gazetteers.units(spark), periods, Gazetteers.unitClasses(spark)))
+          .unionByName(Linkers.linkOccupations(pruned, Gazetteers.occupations(s)))
+          .unionByName(Linkers.linkUnits(pruned, Gazetteers.units(s), periods, Gazetteers.unitClasses(s)))
           .unionByName(magazines._1)
           .unionByName(personDocs._1)
           .unionByName(videos._1)
           // hand-curated extra links (input_rdf/additional_links.ttl,
           // cat'd into the graph at process.sh:78,96)
-          .unionByName(Gazetteers.additionalLinks(spark))
+          .unionByName(Gazetteers.additionalLinks(s))
       links
     }
 
     // -- 3b. media graph: magazine/person-document/video doc entities -----
-    store.stage("media", metrics = Seq("triples" -> count(lit(1)))) {
+    staticGraph("media") {
       Linkers.mediaGraph(magazines._2, personDocs._2, videos._2)
     }
 
@@ -124,13 +192,13 @@ object Pipeline {
     val personLinks = store.stage("person_links",
       metrics = Seq("links" -> count(lit(1)))) {
       RecordLinkage.linkPersons(pruned.unionByName(linked),
-        Gazetteers.ranks(spark), Gazetteers.persons(spark))
+        Gazetteers.ranks(s), Gazetteers.persons(s))
     }
 
     // -- 5. sources rewrite (linker.py:453-509, in-place) -----------------
     val withSources = store.stage("sourced", sortCols = Seq("pred")) {
       val all = pruned.unionByName(linked).unionByName(personLinks)
-      val (added, removed) = Linkers.linkSources(all, Gazetteers.sourcesRegister(spark))
+      val (added, removed) = Linkers.linkSources(all, Gazetteers.sourcesRegister(s))
       all.join(removed,
           Seq("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype", "docId"),
           "left_anti")
@@ -173,12 +241,12 @@ object Pipeline {
           .unionByName(Events.deaths(frame, none))
           .unionByName(Events.captures(frame))
           .unionByName(Events.disappearances(frame, none))
-          .unionByName(Events.promotions(canonical, frame, Gazetteers.ranks(spark)))
+          .unionByName(Events.promotions(canonical, frame, Gazetteers.ranks(s)))
           .unionByName(Events.unitJoinings(canonical, frame))
           .unionByName(Events.relatedPeriods(canonical))
           .unionByName(Events.documentsLinks(frame))
           .unionByName(Events.invertDocumentsLinks(canonical))
-          .unionByName(Events.campCoordinates(Gazetteers.camps(spark)))
+          .unionByName(Events.campCoordinates(Gazetteers.camps(s)))
       canonical.unionByName(events)
         .transform(Triples.distinct)
     }
@@ -191,10 +259,11 @@ object Pipeline {
     // ~hundreds of thousands), which also serializes the manifest's
     // footer-lineage pass. The salt keeps a hot predicate (rdf:type holds
     // ~15% of all triples) spread over 8 writer tasks instead of one.
-    store.stage("final", partitionCols = Seq("pred_key"),
+    val result = store.stage("final", partitionCols = Seq("pred_key"),
       metrics = Seq("triples" -> count(lit(1)))) {
       withPredKey(withEvents)
         .repartition(col("pred_key"), pmod(xxhash64(col("subj")), lit(8)))
     }
+    Bridge.rooted(spark, result)
   }
 }

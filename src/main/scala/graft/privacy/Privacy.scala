@@ -117,15 +117,14 @@ object Privacy {
     val spark = triples.sparkSession
     import spark.implicits._
     val none = typedLit(Seq.empty[String])
-    // collect_set skips nulls; a struct keeps a null object, which the
-    // rule treats as an uncommon name or a captivity resource like any other
-    def objects(p: String, name: String) =
-      collect_set(when($"pred" === p, struct($"objValue".as("o")))).as(name)
-
+    // collect_set skips nulls; a struct keeps a null family name, which the
+    // rule treats as an uncommon name. A null captivity object names no
+    // resource, so it gets no replacement labels.
     val subjects = perSubject(
       triples.filter(isPerson ||
         $"pred".isin(death, birth, familyName, captivity, NS.RDF_SUBJECT, NS.RDF_PREDICATE)),
-      objects(familyName, "families"), objects(captivity, "captivities"),
+      collect_set(when($"pred" === familyName, struct($"objValue".as("o")))).as("families"),
+      collect_set(when($"pred" === captivity, $"objValue")).as("captivities"),
       collect_set(when($"pred" === NS.RDF_SUBJECT, $"objValue")).as("rs"),
       collect_set(when($"pred" === NS.RDF_PREDICATE, $"objValue")).as("rp"))
 
@@ -138,7 +137,7 @@ object Privacy {
       .crossJoin(commonNames(triples, endpointNames).agg(collect_set($"family").as("common")))
       .withColumn("alive", $"cls" === "possibly_alive")
       .withColumn("names", when($"alive", transform($"families", _("o"))).otherwise(none))
-      .withColumn("capts", when($"alive", transform($"captivities", _("o"))).otherwise(none))
+      .withColumn("capts", when($"alive", $"captivities").otherwise(none))
       .withColumn("uncommon", exists($"names", !isCommon(_)))
       .withColumn("common_names", filter($"names", isCommon(_)))
       .withColumn("hpreds", concat(typedLit(healthPreds),

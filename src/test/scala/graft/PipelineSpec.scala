@@ -186,6 +186,12 @@ class PipelineSpec extends AnyFunSuite {
       assert(campTargets.join(campSubjects, Seq("subj"), "left_semi").count() > 0,
         "no location link resolves into the camps graph")
 
+      // each bounded static graph is written as one file
+      for (st <- Seq("camps", "schema", "media")) {
+        val files = new java.io.File(s"$dir/$st/v=0").listFiles().count(_.getName.endsWith(".parquet"))
+        assert(files == 1, s"the $st stage wrote $files parquet files")
+      }
+
       // schema graph written (mapped properties + static base)
       val schema = store0.read("schema")
       assert(schema.filter($"subj" === (NS.SCHEMA_WARSA + "PowCamp")).count() > 0)

@@ -135,6 +135,8 @@ class PruneEquivalenceSpec extends AnyFunSuite {
     assert(subjects.contains("r_pub_cause") && !subjects.contains("r_a1u_family"))
     assert(subjects.contains("r_a1c_family") && !subjects.contains("r_two"))
     assert(subjects.contains("r_nopred") && subjects.contains("r_capt_label"))
+    // a1c's null captivity object names no resource: no label is minted for it
+    assert(!subjects.contains(null), out.filter(_._1 == null))
   }
 
   test("pruning equals the join form on empty input") {

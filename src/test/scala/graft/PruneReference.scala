@@ -44,7 +44,7 @@ object PruneReference {
     val hideSet = hideHealth.unionByName(hidePersonal).unionByName(hideFamily).distinct()
 
     // captivity label redaction: labels of captivity resources of alive recs
-    val captivityOf = triples.filter($"pred" === (NS.SCHEMA_POW + "captivity"))
+    val captivityOf = triples.filter($"pred" === (NS.SCHEMA_POW + "captivity") && $"objValue".isNotNull)
       .select($"subj", $"objValue".as("captivity"))
       .join(alive.select("subj"), Seq("subj"))
 
