@@ -33,22 +33,18 @@ import org.apache.spark.sql.graftbridge.Bridge
   * ER candidate join (salted), connected components (iterative), and the
   * final `partitionBy(pred_key)` write.
   *
-  * Codegen only where it pays. A cold run on a small input is mostly a
+  * Codegen only for extraction. A cold run on a small input is mostly a
   * compile run: with codegen in every stage a 500-document run compiles
   * about 520 Janino classes at about 30 ms each, while the data would take
-  * the interpreted operators a few seconds. Generated code wins back its
-  * compile time only on enough rows per task slot (the compile is paid
-  * about once per plan, the per-row saving on every slot). So the run
-  * plans in two sessions:
-  *  - the caller's, for `extract` and `extract_errors`: their cost is the
-  *    per-document span dispatch, whatever the input size;
-  *  - a private clone of it with codegen off ([[Bridge.withoutCodegen]]),
-  *    for the `camps`, `schema` and `media` graphs, whose size the
-  *    vendored gazetteers bound, and for every stage from `pruned` on when
-  *    the committed `extract` snapshot holds fewer than
-  *    [[InterpretedRowsPerSlot]] triples per task slot. The count is read
-  *    from the manifest (no Spark job), so a resumed run decides as the
-  *    fresh run did.
+  * the interpreted operators a few seconds. So every stage but `extract`
+  * and `extract_errors` plans in a private clone of the caller's session
+  * with codegen off ([[Bridge.withoutCodegen]]); the two extraction stages
+  * keep the caller's session, since their cost is the per-document span
+  * dispatch, whatever the input size, and their plans compile few classes
+  * (about 24). Generated code wins its compile time back only on large
+  * inputs: on 4 slots a cold run planned this way was not slower than one
+  * with codegen in every stage up to 20,000 documents, and about 8% slower
+  * at 50,000 (about 1.5 M extracted triples; ROADMAP item 8).
   * The caller's session is never changed, its query-execution listeners
   * see every stage write (the clone copies them), and the result is
   * returned as a frame of the caller's session.
@@ -61,36 +57,6 @@ object Pipeline {
     df.withColumn("pred_key", regexp_replace(
       regexp_extract(col("pred"), "([^/#]+)[/#]?$", 1), "[^A-Za-z0-9_.-]", "_"))
 
-  /** Extracted triples per task slot below which the stages from `pruned`
-    * on plan without codegen. Cold `Pipeline.run` seconds, interpreted vs
-    * codegen from `pruned` on (static stages interpreted in both), on a
-    * 4-core 16 GB host, 4 GB heap, 2 × slots shuffle partitions, runs
-    * interleaved, each pair with equal final digests:
-    * {{{
-    *  replicas  extract rows  slots  rows/slot  interpreted          codegen
-    *   20          301,111      4     75,278    48.3 42.9 44.2       48.9 46.9 56.6
-    *   30          451,666      4    112,917    48.6 47.0 48.7       54.5 48.4 51.5
-    *   40          602,221      4    150,555    74.5 55.7 51.6       74.4 56.4 58.1
-    *   60          903,332      4    225,833    81.9 66.5 67.0       72.9 70.7 66.5
-    *  100        1,505,556      4    376,389    84.5 84.8 82.2       80.3 84.5 74.7
-    *   20          301,111      2    150,556    49.8 45.1            49.8 50.8
-    *   30          451,666      2    225,833    53.1 60.8 65.5 54.7  54.2 54.8 52.4 56.8
-    *   40          602,221      2    301,111    60.4 54.4            56.5 55.4
-    * }}}
-    * (A replica is 500 `SynthDocs` documents.)
-    * Interpreted wins clearly up to 30 replicas at local[4] and stops
-    * winning between 20 and 30 at local[2]: the crossover moves with the
-    * slot count (a compile is paid about once per plan, the interpreted
-    * per-row cost spreads over the slots), so the constant is per slot,
-    * just above the 30-replica point. */
-  val InterpretedRowsPerSlot: Long = 120000L
-
-  /** Whether a run whose `extract` snapshot holds `extractRows` triples,
-    * on `slots` task slots, plans its stages from `pruned` on in the
-    * interpreted session. */
-  def plansInterpreted(extractRows: Long, slots: Int): Boolean =
-    extractRows / math.max(1, slots) < InterpretedRowsPerSlot
-
   /** `requestedToday` is the privacy-cutoff reference date; the EFFECTIVE
     * date is pinned per workDir on first run (`SnapshotStore.pinRunDate`),
     * so a kill-and-resume across midnight — or a caller passing a
@@ -102,17 +68,17 @@ object Pipeline {
   def run(spark: SparkSession, docs: DataFrame, workDir: String,
           requestedToday: java.time.LocalDate): DataFrame = {
     import spark.implicits._
-    val interpreted = Bridge.withoutCodegen(spark)
-    val callerStore = new SnapshotStore(spark, workDir)
-    val today = callerStore.pinRunDate(requestedToday)
+    // every stage plans in `s` but extraction, whose write plans in the
+    // session of `docs`; the store reads each snapshot back in `s`
+    val s = Bridge.withoutCodegen(spark)
+    val store = new SnapshotStore(s, workDir)
+    val today = store.pinRunDate(requestedToday)
 
-    // a bounded static graph: planned in the interpreted session and
-    // written as one file (a local relation scans as up to
-    // defaultParallelism partitions; coalesce adds no shuffle and no job)
+    // a bounded static graph, written as one file (a local relation scans
+    // as up to defaultParallelism partitions; coalesce adds no shuffle and
+    // no job)
     def staticGraph(name: String)(graph: => DataFrame): Unit =
-      callerStore.stage(name, metrics = Seq("triples" -> count(lit(1)))) {
-        Bridge.rooted(interpreted, graph).coalesce(1)
-      }
+      store.stage(name, metrics = Seq("triples" -> count(lit(1))))(graph.coalesce(1))
 
     // -- 0. camps & hospitals conversion (process.sh:20-23; convert.sh
     // camps flow): raw row-numbered triples -> E19 re-mint under the
@@ -124,37 +90,29 @@ object Pipeline {
     // driver as a local relation, and the stage runs one Spark job, the
     // snapshot write.
     staticGraph("camps") {
-      CampConversion.campGraph(Gazetteers.rawCampTriples(interpreted))
+      CampConversion.campGraph(Gazetteers.rawCampTriples(s))
     }
 
     // -- 0b. schema graph (csv_to_rdf.py --outschema + schema_base.ttl) ---
     staticGraph("schema") {
-      Extraction.schemaTriples(interpreted).toDF()
+      Extraction.schemaTriples(s).toDF()
     }
 
-    // -- 1. extraction, in the caller's session: the rule below keys on
-    // its output size, and its own plans compile few classes (about 24) --
-    val extracted = callerStore.stage("extract",
+    // -- 1. extraction, in the caller's session (the session of `docs`) --
+    val extracted = store.stage("extract",
       metrics = Seq("triples" -> count(lit(1))), sortCols = Seq("pred")) {
       Extraction.triples(docs).toDF()
     }
-    callerStore.stage("extract_errors",
+    store.stage("extract_errors",
       metrics = Seq("errors" -> count(lit(1)))) {
       Extraction.errors(docs).toDF()
     }
-
-    // every later stage plans in `s`: the interpreted session below the
-    // crossover, decided from the committed manifest, so that a resumed
-    // run decides as the fresh run did
-    val s = if (plansInterpreted(callerStore.rows("extract"),
-      spark.sparkContext.defaultParallelism)) interpreted else spark
-    val store = new SnapshotStore(s, workDir)
 
     // -- 2. privacy pruning (process.sh:25-28 runs before linking); the
     // casualties name-count gazetteer plays the WarSampo SPARQL role in
     // the common-name rule (prune_nonpublic.py:149-175)
     val pruned = store.stage("pruned", sortCols = Seq("pred")) {
-      Privacy.prunePersons(Bridge.rooted(s, extracted), Gazetteers.casualtiesNameCounts(s), today)
+      Privacy.prunePersons(extracted, Gazetteers.casualtiesNameCounts(s), today)
     }
 
     // -- 3. linking (process.sh:30-96) ------------------------------------

@@ -77,12 +77,6 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** The row count in the latest manifest of a committed stage: a file
-    * read, no Spark job. */
-  def rows(stage: String): Long =
-    "\"rows\": ([0-9]+)".r.findFirstMatchIn(readManifest(stage))
-      .getOrElse(sys.error(s"no row count in the manifest of '$stage'")).group(1).toLong
-
   /** Write a new snapshot version. `partitionCols` become physical
     * partitions (e.g. predicate partitioning of the triples table).
     *

@@ -42,7 +42,7 @@ object RunPipeline {
     val store = new SnapshotStore(spark, workDir)
     store.committedStages.foreach { st =>
       val m = store.readManifest(st)
-      val rows = store.rows(st)
+      val rows = "\"rows\": (\\d+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("?")
       val sec = "\"sec\": ([0-9.]+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("?")
       val metrics = "\"metrics\": \\{([^}]*)\\}".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("")
       println(s"[stage] $st rows=$rows sec=$sec metrics={$metrics}")

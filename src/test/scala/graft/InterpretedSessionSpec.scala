@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import scala.collection.mutable
 
 import org.scalatest.concurrent.Eventually._
@@ -12,18 +9,15 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.extract.{Extraction, SynthDocs}
+import graft.extract.SynthDocs
 import graft.pipeline.{Pipeline, SnapshotStore}
 
-/** `Pipeline.run` plans its bounded static stages, and every stage from
-  * `pruned` on when the extract snapshot is small, in a private child
+/** `Pipeline.run` plans every stage but extraction in a private child
   * session without codegen: the child really compiles (almost) nothing,
-  * the caller's session is left as it was, the caller's listeners see
-  * every stage write, and the choice follows the extract manifest's row
-  * count per task slot, on a fresh and on a resumed run. */
+  * the caller's session is left as it was, and the caller's listeners see
+  * every stage write. */
 class InterpretedSessionSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -31,8 +25,7 @@ class InterpretedSessionSpec extends AnyFunSuite {
   private val factoryMode = "spark.sql.codegen.factoryMode"
   private val stages = Seq("camps", "schema", "extract", "extract_errors", "pruned", "linked",
     "media", "person_links", "sourced", "canonical", "record_frame", "events", "final")
-  private val static = Set("camps", "schema", "media")
-  private val tail = stages.drop(stages.indexOf("pruned")).toSet -- static
+  private val extraction = Set("extract", "extract_errors")
 
   /** Records, for every file write, the stage it wrote and whether its
     * session planned without codegen. */
@@ -47,19 +40,12 @@ class InterpretedSessionSpec extends AnyFunSuite {
       }
     }
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    /** stage -> planned without codegen, once every stage of `expect`
-      * is seen. */
-    def await(expect: Set[String]): Map[String, Boolean] = eventually(timeout(60.seconds)) {
+    /** stage -> planned without codegen, once every stage is seen. */
+    def await(): Map[String, Boolean] = eventually(timeout(60.seconds)) {
       val m = synchronized(seen.toMap)
-      assert(expect.subsetOf(m.keySet), s"writes seen: $m")
+      assert(stages.toSet.subsetOf(m.keySet), s"writes seen: $m")
       m
     }
-  }
-
-  private def withWrites[A](dir: String)(body: StageWrites => A): A = {
-    val writes = new StageWrites(dir)
-    spark.listenerManager.register(writes)
-    try body(writes) finally spark.listenerManager.unregister(writes)
   }
 
   /** Janino compiles so far in this JVM. */
@@ -77,22 +63,12 @@ class InterpretedSessionSpec extends AnyFunSuite {
 
   private def docs: DataFrame = SynthDocs.fromDocuments(spark, SparkTestBase.corpusDir)
 
-  test("the rule: interpreted below the crossover rows per task slot, codegen at and above it") {
-    val c = Pipeline.InterpretedRowsPerSlot
-    for (slots <- Seq(1, 2, 4, 32)) {
-      assert(Pipeline.plansInterpreted(0L, slots))
-      assert(Pipeline.plansInterpreted(c * slots - 1, slots), s"below, $slots slots")
-      assert(!Pipeline.plansInterpreted(c * slots, slots), s"at, $slots slots")
-      assert(!Pipeline.plansInterpreted(c * slots + slots, slots), s"above, $slots slots")
-    }
-    // the spec corpus is far below it on this session's slots
-    assert(15056L / spark.sparkContext.defaultParallelism < c)
-  }
-
   test("a fresh small run compiles almost nothing and leaves the caller's session as it was") {
     val before = spark.conf.getAll
     SparkTestBase.withTempDir("graft_interp") { dir =>
-      withWrites(dir) { writes =>
+      val writes = new StageWrites(dir)
+      spark.listenerManager.register(writes)
+      try {
         clearCompiledClasses()
         val c0 = compiles
         val out = Pipeline.run(spark, docs, dir, today)
@@ -102,51 +78,17 @@ class InterpretedSessionSpec extends AnyFunSuite {
         // every stage a cold run compiles about 530 classes
         assert(compiled <= 60, s"a small run compiled $compiled classes")
 
-        // the caller's listener saw every stage write, each in the
-        // session the rule picks
-        val seen = writes.await(stages.toSet)
+        // the caller's listener saw every stage write, only extraction's
+        // with codegen
+        val seen = writes.await()
         assert(seen.keySet == stages.toSet, seen)
-        assert(stages.forall(st => seen(st) == (static(st) || tail(st))), seen)
+        assert(stages.forall(st => seen(st) == !extraction(st)), seen)
         // the result is the caller's frame
         assert(out.sparkSession eq spark)
-        assert(out.count() == new SnapshotStore(spark, dir).rows("final"))
-      }
+        assert(out.count() == new SnapshotStore(spark, dir).read("final").count())
+      } finally spark.listenerManager.unregister(writes)
     }
     assert(spark.conf.getAll == before)
     assert(spark.conf.get(factoryMode) != "NO_CODEGEN")
-  }
-
-  test("a resumed run decides from the extract manifest") {
-    SparkTestBase.withTempDir("graft_interp_resume") { dir =>
-      // commit only the extract stage; each run below resumes from it
-      val store = new SnapshotStore(spark, dir)
-      store.stage("extract", metrics = Seq("triples" -> count(lit(1))), sortCols = Seq("pred")) {
-        Extraction.triples(docs).toDF()
-      }
-      val n = store.rows("extract")
-      val manifest = Paths.get(dir, "extract", "v=0", "_MANIFEST.json")
-      def setRows(rows: Long): Unit = {
-        val m = new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
-        Files.write(manifest, m.replaceFirst("\"rows\": [0-9]+", s""""rows": $rows""")
-          .getBytes(StandardCharsets.UTF_8))
-        // the local filesystem checks a checksum file next to each file
-        Files.deleteIfExists(manifest.resolveSibling("._MANIFEST.json.crc"))
-        assert(store.rows("extract") == rows)
-      }
-      def resume(): Map[String, Boolean] = withWrites(dir) { writes =>
-        Seq("pruned", "linked", "person_links", "sourced", "canonical", "record_frame", "events",
-          "final").foreach(store.invalidate)
-        Pipeline.run(spark, docs, dir, today).count()
-        writes.await(tail)
-      }
-      // at the crossover: codegen from pruned on
-      setRows(Pipeline.InterpretedRowsPerSlot * spark.sparkContext.defaultParallelism)
-      val at = resume()
-      assert(tail.forall(st => !at(st)) && !at.contains("extract"), at)
-      // the true count, below it: interpreted from pruned on
-      setRows(n)
-      val below = resume()
-      assert(tail.forall(below) && !below.contains("extract"), below)
-    }
   }
 }
