@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's correctness compare: for each query result
-parquet under OUT_DIR, run the oracle SQL in DuckDB over the same sf tables
-and compare (columns sorted by name, values hashed row-wise after sorting).
-Usage: check_oracle.py /tmp/verify_out /root/testdata/sf0.01
+"""The gate's correctness compare: for each query result parquet under
+OUT_DIR, run the oracle SQL in DuckDB over the same tables and compare
+(columns sorted by name, values hashed row-wise after sorting). A result
+with no oracle, an oracle with no result (the row failed in graft.Verify)
+and a match on 0 rows all count as failures.
+Usage: check_oracle.py /tmp/verify_out perfbench/data
 """
 import json, sys, glob, os
 import duckdb
@@ -25,14 +27,18 @@ def dtypes_of(df):
     return {c: str(t) for c, t in df.dtypes.items()}
 
 fails = 0
-for name in sorted(os.listdir(out_dir)):
+results = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+for name in sorted(results | set(oracle)):
     p = os.path.join(out_dir, name)
-    if not os.path.isdir(p):
+    if name not in results:
+        print(f"{name:28s} NO RESULT (the query failed in Verify)")
+        fails += 1
         continue
     spark_df = pd.concat([pd.read_parquet(f) for f in glob.glob(p + "/*.parquet")]) \
         if glob.glob(p + "/*.parquet") else pd.DataFrame()
     if name not in oracle:
-        print(f"{name:28s} rows={len(spark_df):6d}  (rows-only, no oracle)")
+        print(f"{name:28s} NO ORACLE rows={len(spark_df)}")
+        fails += 1
         continue
     try:
         duck_df = con.execute(oracle[name]).df()
@@ -60,6 +66,9 @@ for name in sorted(os.listdir(out_dir)):
         for i in idx:
             print("  spark:", dict(a.loc[i]))
             print("  duck :", dict(b.loc[i]))
+        fails += 1
+    elif len(a) == 0:
+        print(f"{name:28s} EMPTY MATCH: 0 rows on both sides")
         fails += 1
     else:
         print(f"{name:28s} OK rows={len(a)}")

@@ -8,39 +8,18 @@ import org.apache.spark.sql.functions._
   * [[graft.streaming.EventStreams.sessionize]] (which holds the same gap
   * rule in `flatMapGroupsWithState` for unbounded streams): a new session
   * starts when the gap to the user's previous event exceeds `gapSeconds`.
+  * Ordering ties on the timestamp stay in one session (gap 0); the gap is
+  * computed in MICROSECONDS so batch and streaming agree on sub-second
+  * timestamps.
   *
-  * Scale shape: two window functions over ONE partitioning (lag to mark
-  * session starts, a running sum to number them) — a single shuffle on
-  * the user key; the per-session aggregate that usually follows reuses
-  * the same partitioning, so Catalyst plans no second exchange.
+  * The plain form — two windows partitioned by the user key alone, so a
+  * hot user serializes into one task's sort — is kept in test code as
+  * `SessionsReference.sessionize`, the equivalence reference of
+  * [[Sessions.sessionizeBucketed]] (OpsSpec, PropertySpec).
   */
 object Sessions {
 
-  /** Adds a 1-based `session_seq` per user ordered by event time.
-    * Ordering ties on the timestamp stay in one session (gap 0). The gap
-    * is computed in MICROSECONDS so batch and streaming agree on
-    * sub-second timestamps (the streaming sessionizer compares
-    * millisecond epochs; `unix_timestamp` would truncate to seconds and
-    * under-measure gaps like 1800.05 s).
-    *
-    * HOT-KEY CONTRACT: both windows partition by the user key alone — a
-    * single user holding a large fraction of the table serializes into
-    * one task's sort. For skewed keys at scale use [[sessionizeBucketed]]
-    * (output-identical; equivalence spec in OpsSpec). */
-  def sessionize(events: DataFrame, userCol: String, tsCol: String,
-                 gapSeconds: Long = 1800L): DataFrame = {
-    val byUser = Window.partitionBy(col(userCol)).orderBy(col(tsCol))
-    events
-      .withColumn("__prev", lag(col(tsCol), 1).over(byUser))
-      .withColumn("__new", when(col("__prev").isNull ||
-        unix_micros(col(tsCol).cast("timestamp")) - unix_micros(col("__prev").cast("timestamp")) > gapSeconds * 1000000L, 1)
-        .otherwise(0))
-      .withColumn("session_seq", sum(col("__new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("__prev", "__new")
-  }
-
-  /** Skew-safe sessionization — output-identical to [[sessionize]], with
+  /** Skew-safe sessionization — output-identical to the plain form, with
     * every data-sized window partitioned by (user, TIME BUCKET):
     *
     *  1. in-bucket pass: lag/running-sum within (user, bucket) — the only
@@ -58,7 +37,7 @@ object Sessions {
     * Per-task bound = events per (user, bucket); `bucketSeconds` is the
     * granularity knob exactly as on [[graft.ops.AsOfJoin.asOfBucketed]].
     *
-    * NULL handling matches [[sessionize]] exactly: null-timestamp rows sort
+    * NULL handling matches the plain form exactly: null-timestamp rows sort
     * first in the user's timeline (nulls-first, the plain form's window
     * order) and each opens its own session; a null user key is its own
     * partition. Null timestamps ride a SENTINEL bucket (Long.MinValue — a

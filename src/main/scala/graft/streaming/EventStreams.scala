@@ -47,8 +47,9 @@ object EventStreams {
     * The gap decision runs in micros (micros-precision timestamps agree
     * with the batch face); emitted `startMs`/`endMs` stay millis.
     *
-    * MEMORY CONTRACT (the streaming analogue of
-    * [[graft.ops.Sessions.sessionize]]'s hot-key note): cross-batch state
+    * MEMORY CONTRACT (the streaming analogue of the hot-key note on the
+    * plain batch form, `SessionsReference.sessionize` in test code, which
+    * [[graft.ops.Sessions.sessionizeBucketed]] avoids): cross-batch state
     * per user is O(1) — one open `SessionState` — but each user's
     * PER-MICROBATCH slice is buffered and sorted in one task. Bounded
     * triggers (rate limits, `maxFilesPerTrigger`/`maxBytesPerTrigger` on a

@@ -4,14 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for selected queries — the plan-quality
   * audit loop (PushedFilters reach the scan? dims broadcast? shuffles only
-  * where semantics demand?). */
+  * where semantics demand?).
+  * `runMain graft.tools.ExplainQueries [corpusDir [query...]]`; the corpus
+  * defaults to the vendored `perfbench/data` tables, the queries to every
+  * relational gate row. */
 object ExplainQueries {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val sfDir = if (args.nonEmpty) args(0) else "perfbench/data"
     val names = if (args.length > 1) args.tail.toSeq
-      else Seq("s2_filter_project", "j1_broadcast_dims", "j15_anti_join",
-        "w1_topk_per_group", "dedup_exact", "embed_cosine_topk")
-    val spark = SparkSession.builder().master("local[4]")
+      else graft.gate.RelationalRows.rows.map(_.name)
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

